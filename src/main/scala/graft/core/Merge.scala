@@ -25,10 +25,14 @@ import org.apache.spark.sql.functions._
   *    count over the join output + assert_true), so a merge is one query
   *    execution with no separate probe pass over target and source.
   *
-  * Scale: the plan is one shuffle (the outer join) plus a map-side
-  * projection; with AQE on, a small delta side broadcasts automatically.
-  * This is the "copy-on-write, whole table" strategy (v1); file-level
-  * copy-on-write via manifest min/max pruning is the planned v2
+  * Scale: the outer join shuffles both sides, however small the source
+  * (a `full_outer` join never broadcasts), and the cardinality check,
+  * when on, shuffles the join output once more; the rest is a map-side
+  * projection. [[MergeBuilder.withSmallSourceMaxRows]] opts small sources
+  * into a plan that broadcasts the source keys instead. Copy-on-write is
+  * file-level by default ([[MergeBuilder.withFileLevelRewrite]]): only the
+  * files [[TableStore.filesHitByKeys]] cannot rule out are read and
+  * rewritten, and the rest carry into the new snapshot untouched
   * (SURVEY.md §4 "MERGE physical strategy").
   *
   * In clause conditions/assignments, refer to source columns with
@@ -364,17 +368,7 @@ final class MergeBuilder private[core] (store: TableStore, table: String) {
     * reference/docs/README.md:300-302). A concurrent commit landing
     * between plan and commit triggers a full replan (see [[withRetries]]);
     * retries exhausted surfaces [[TableStore.CommitConflictException]]. */
-  def run(): Long = {
-    var attempt = 0
-    while (true) {
-      try return runOnce()
-      catch {
-        case _: TableStore.CommitConflictException if attempt < retries =>
-          attempt += 1
-      }
-    }
-    -1L // unreachable
-  }
+  def run(): Long = TableStore.retryOnConflict(retries)(runOnce())
 
   private def runOnce(): Long = {
     // Pin the snapshot the whole plan reads: the commit targets exactly

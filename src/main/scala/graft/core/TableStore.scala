@@ -1184,12 +1184,17 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     }
   }
 
-  /** Split the current snapshot's files into (hit, untouched) by joining
-    * the DISTINCT source keys against the per-file [min,max] ranges — a
-    * broadcast range join over the (tiny) file-range table, so a wide but
-    * sparse key set (e.g. one update + one far-away insert) does not smear
-    * into "every file is hit" the way whole-range bounds would. Files
-    * without stats for the column are conservatively hit. */
+  /** Split the current snapshot's files into (hit, untouched) for a key
+    * set — the planning primitive of file-level copy-on-write MERGE. The
+    * distinct non-null keys are collected once, capped one past
+    * [[bloomMaxKeys]]. Under the cap, each file's [min,max] range is tested
+    * against the sorted keys on the driver, so a wide but sparse key set
+    * (e.g. one update + one far-away insert) does not smear into "every
+    * file is hit" the way whole-range bounds would, and the same keys
+    * then probe the surviving files' bloom filters. Over the cap, the keys
+    * are range-joined against a broadcast table of the file ranges and no
+    * bloom is read. Files without stats for the column are
+    * conservatively hit. */
   def filesHitByKeys(table: String, column: String, keys: DataFrame)
       : (Seq[FileEntry], Seq[FileEntry]) = {
     import org.apache.spark.sql.functions.{broadcast, unix_micros, datediff, to_date}
@@ -1230,23 +1235,24 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     // (silently losing MERGE rows), so each kind group is ranged in its
     // own domain; a group whose kind has no sound cast from the key type
     // is conservatively hit.
-    def hitsForKind(kind: String, group: Seq[FileEntry])
+    val groups = statFiles.groupBy(_.stats(column).kind).toSeq
+    def castType(kind: String): String = kind match {
+      case "long" => "long"
+      case "double" => "double"
+      case d if d.startsWith("dec") => s"decimal(38,${d.stripPrefix("dec")})"
+      case _ => "string"
+    }
+    def domainKey(kind: String): Column = (kind, keyType) match {
+      case ("long", TimestampType) => unix_micros(keyRaw)
+      case ("long", DateType) => datediff(keyRaw, to_date(lit("1970-01-01")))
+        .cast("long")
+      case ("long", _) => keyRaw.cast("long")
+      case ("double", _) => keyRaw.cast("double")
+      case (d, _) if d.startsWith("dec") => keyRaw.cast(castType(d))
+      case _ => keyRaw.cast("string")
+    }
+    def hitsByRangeJoin(kind: String, group: Seq[FileEntry])
         : (Seq[FileEntry], Seq[FileEntry]) = {
-      val castType = kind match {
-        case "long" => "long"
-        case "double" => "double"
-        case d if d.startsWith("dec") => s"decimal(38,${d.stripPrefix("dec")})"
-        case _ => "string"
-      }
-      val keyExpr = (kind, keyType) match {
-        case ("long", TimestampType) => unix_micros(keyRaw)
-        case ("long", DateType) => datediff(keyRaw, to_date(lit("1970-01-01")))
-          .cast("long")
-        case ("long", _) => keyRaw.cast("long")
-        case ("double", _) => keyRaw.cast("double")
-        case (d, _) if d.startsWith("dec") => keyRaw.cast(castType)
-        case _ => keyRaw.cast("string")
-      }
       // dec<scale> stats hold the unscaled integer — rehydrate to a plain
       // decimal rendering before the cast so ranges compare in value space
       val statStr: String => String =
@@ -1260,8 +1266,8 @@ class TableStore(spark: SparkSession, val warehouse: String) {
       val rangesDf = {
         import spark.implicits._
         ranges.toDF("__idx", "__mn", "__mx")
-          .select(col("__idx"), col("__mn").cast(castType).as("__mn"),
-            col("__mx").cast(castType).as("__mx"))
+          .select(col("__idx"), col("__mn").cast(castType(kind)).as("__mn"),
+            col("__mx").cast(castType(kind)).as("__mx"))
       }
       // A stat that does not cast into the comparison domain (null bound)
       // can never match the range predicate — that file must be
@@ -1269,7 +1275,7 @@ class TableStore(spark: SparkSession, val warehouse: String) {
       val nullIdx = rangesDf
         .filter(col("__mn").isNull || col("__mx").isNull)
         .select(col("__idx")).collect().map(_.getInt(0)).toSet
-      val hitIdx = keys.select(keyExpr.as("__k")).distinct()
+      val hitIdx = keys.select(domainKey(kind).as("__k")).distinct()
         .join(broadcast(rangesDf),
           col("__k") >= col("__mn") && col("__k") <= col("__mx"))
         .select(col("__idx")).distinct().collect().map(_.getInt(0)).toSet
@@ -1277,38 +1283,66 @@ class TableStore(spark: SparkSession, val warehouse: String) {
         hitIdx(p._2) || nullIdx(p._2))
       (h.map(_._1), u.map(_._1))
     }
-    val grouped = statFiles.groupBy(_.stats(column).kind).toSeq
-      .map { case (kind, group) => hitsForKind(kind, group) }
-    var hit = grouped.flatMap(_._1)
-    var untouched = grouped.flatMap(_._2)
+    // Bloom hashing follows the column's PHYSICAL type, so normalize by
+    // the key's own type (timestamps → epoch micros, dates → epoch days)
+    // rather than any one file's stat kind.
+    val bloomKey = keyType match {
+      case TimestampType => unix_micros(keyRaw)
+      case DateType => datediff(keyRaw, to_date(lit("1970-01-01"))).cast("long")
+      case _ => keyRaw
+    }
+    // The one pass over the keys: each distinct non-null key in the bloom
+    // domain and in every stat kind's domain, cast exactly as the range
+    // join casts it.
+    val sample = keys.filter(keyRaw.isNotNull)
+      .select((bloomKey.as("__b") +: groups.zipWithIndex.map { case ((kind, _), i) =>
+        domainKey(kind).as(s"__k$i") }): _*)
+      .distinct().limit(bloomMaxKeys + 1).collect()
+    if (sample.length > bloomMaxKeys) {
+      val split = groups.map { case (kind, group) => hitsByRangeJoin(kind, group) }
+      return (split.flatMap(_._1) ++ noStat, split.flatMap(_._2))
+    }
+    val split = groups.zipWithIndex.map { case ((_, group), i) =>
+      // a key that does not cast into the domain matches no range
+      val sorted = sample.flatMap(r => Option(r.get(i + 1)))
+        .sortWith(cmp(_, _) < 0).toIndexedSeq
+      group.partition(fe => anyKeyInRange(fe.stats(column), sorted))
+    }
+    val hit = split.flatMap(_._1)
     // Bloom refinement: random keys (md5-style pks) make every [min,max]
     // range overlap every file, so range pruning degenerates to "rewrite
-    // all". When the key set is small (the CDC-merge case), test the keys
-    // against each candidate file's parquet bloom filter — no false
-    // negatives, so dropping a bloom-miss file is exact. Files without a
-    // bloom for the column stay conservatively hit.
-    if (hit.size > 1) {
-      // Bloom hashing follows the column's PHYSICAL type, so normalize by
-      // the key's own type (timestamps → epoch micros, dates → epoch days)
-      // rather than any one file's stat kind.
-      val bloomKeyExpr = keyType match {
-        case TimestampType => unix_micros(keyRaw)
-        case DateType => datediff(keyRaw, to_date(lit("1970-01-01"))).cast("long")
-        case _ => keyRaw
+    // all". Test the keys against each candidate file's parquet bloom
+    // filter — no false negatives, so dropping a bloom-miss file is exact.
+    // Files without a bloom for the column stay conservatively hit.
+    val (bloomHit, bloomMiss) =
+      if (hit.size <= 1) (hit, Seq.empty)
+      else {
+        val keyVals = sample.map(_.get(0)).toSeq
+        hit.partition(fe => bloomMayContain(table, fe, column, keyVals))
       }
-      val keyVals = keys.select(bloomKeyExpr.as("__k")).distinct()
-        .limit(bloomMaxKeys + 1).collect().map(_.get(0)).toSeq
-      if (keyVals.size <= bloomMaxKeys) {
-        val (bh, bm) = hit.partition(fe => bloomMayContain(table, fe, column, keyVals))
-        hit = bh
-        untouched = untouched ++ bm
-      }
-    }
-    (hit ++ noStat, untouched)
+    (bloomHit ++ noStat, split.flatMap(_._2) ++ bloomMiss)
   }
 
-  /** Max distinct keys [[filesHitByKeys]] will bloom-test driver-side;
-    * larger key sets fall back to range-only pruning. */
+  /** Does any of `sorted` (ascending in the domain of `s.kind`) fall in the
+    * file's [min, max]? Binary search for the first key ≥ min, then one
+    * test against max; a bound that does not compare in the stat's domain
+    * is conservatively a hit. */
+  private def anyKeyInRange(s: ColStats, sorted: IndexedSeq[Any]): Boolean = {
+    var lo = 0
+    var hi = sorted.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      TableStore.cmpStat(s.min, s.kind, sorted(mid)) match {
+        case None => return true
+        case Some(c) if c > 0 => lo = mid + 1
+        case _ => hi = mid
+      }
+    }
+    lo < sorted.length && TableStore.cmpStat(s.max, s.kind, sorted(lo)).forall(_ >= 0)
+  }
+
+  /** Max distinct keys [[filesHitByKeys]] will test driver-side (ranges
+    * and blooms); larger key sets fall back to a range-only join. */
   var bloomMaxKeys: Int = 10000
 
   /** Could `fe` contain any of `keyVals` in `column`, per the file's
@@ -1399,15 +1433,7 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     // files forward; nothing this writer decides depends on the snapshot
     // it lost against. (Rewrite-style commits — merge/update/delete —
     // deliberately surface CommitConflictException instead.)
-    var attempt = 0
-    while (true) {
-      try return appendOnce(table, df, operation)
-      catch {
-        case _: TableStore.CommitConflictException if attempt < 3 =>
-          attempt += 1
-      }
-    }
-    -1L // unreachable
+    TableStore.retryOnConflict(3)(appendOnce(table, df, operation))
   }
 
   /** One non-retrying append attempt, surfacing
@@ -1936,18 +1962,9 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     * the same delta on top of it. */
   private def morWrite(table: String, dataRows: Option[DataFrame],
       keySource: DataFrame, keyCols: Seq[String], operation: String,
-      streamEpoch: Option[(String, Long)]): Long = {
-    var attempt = 0
-    while (true) {
-      try return morWriteOnce(table, dataRows, keySource, keyCols,
-        operation, streamEpoch)
-      catch {
-        case _: TableStore.CommitConflictException if attempt < 5 =>
-          attempt += 1
-      }
-    }
-    -1L // unreachable
-  }
+      streamEpoch: Option[(String, Long)]): Long =
+    TableStore.retryOnConflict(5)(morWriteOnce(table, dataRows, keySource, keyCols,
+      operation, streamEpoch))
 
   private def morWriteOnce(table: String, dataRows: Option[DataFrame],
       keySource: DataFrame, keyCols: Seq[String], operation: String,
@@ -2604,8 +2621,7 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     * (the staged files were aligned to the old schema — re-stage). */
   def publishStaged(table: String, stageId: String): Long = {
     val st = stagedManifest(table, stageId)
-    var attempt = 0
-    while (true) {
+    TableStore.retryOnConflict(3) {
       val m = manifests(table).maxBy(_.version)
       require(m.schemaJson == st.schemaJson,
         s"table $table schema changed since stage $stageId was written; " +
@@ -2614,16 +2630,10 @@ class TableStore(spark: SparkSession, val warehouse: String) {
         s"table $table gained merge-on-read delete files since stage " +
           s"$stageId; staged paths carry no version sequence — compact, " +
           "then publish")
-      try {
-        val v = commitFiles(table, m.files ++ st.files, None, "wap_publish")
-        fs(stagedPath(table, stageId)).delete(stagedPath(table, stageId), false)
-        return v
-      } catch {
-        case _: TableStore.CommitConflictException if attempt < 3 =>
-          attempt += 1
-      }
+      val v = commitFiles(table, m.files ++ st.files, None, "wap_publish")
+      fs(stagedPath(table, stageId)).delete(stagedPath(table, stageId), false)
+      v
     }
-    -1L // unreachable
   }
 
   /** Drop a staged snapshot: delete its side manifest and data files. */
@@ -3576,6 +3586,15 @@ object TableStore {
     * writer created that manifest first. Recompute against the new
     * snapshot and retry (appends do this automatically). */
   class CommitConflictException(msg: String) extends RuntimeException(msg)
+
+  /** Run `body`, and run it again each time it loses an optimistic commit,
+    * at most `retries` more times; the last conflict surfaces. Sound only
+    * when every run re-reads the snapshot it commits against. */
+  def retryOnConflict[A](retries: Int)(body: => A): A =
+    try body
+    catch {
+      case _: CommitConflictException if retries > 0 => retryOnConflict(retries - 1)(body)
+    }
 
   /** Bucket partition transform (Iceberg's `bucket(N, col)` re-expressed
     * portably): bucket = first 6 md5 nibbles of the key's string

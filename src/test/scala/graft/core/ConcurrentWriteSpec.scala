@@ -1,6 +1,8 @@
 package graft.core
 
 import graft.SparkSpec
+import graft.curation.Scd2
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Concurrent writers racing optimistic commits: merges replan on
@@ -65,5 +67,71 @@ class ConcurrentWriteSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(got == Seq((100L, 100L), (101L, 100L), (102L, 100L),
       (103L, 100L)))
+  }
+
+  /** A store whose next [[readFiles]] first lets a rival writer commit:
+    * the rival lands after the merge chose its files and before it
+    * commits, the window a merge must not lose the rival's rows in. */
+  private final class RivalBeforeRead(wh: String) extends TableStore(spark, wh) {
+    @volatile var rival: Option[() => Unit] = None
+    override def readFiles(table: String, files: Seq[TableStore.FileEntry]): DataFrame = {
+      val r = rival
+      rival = None
+      r.foreach(_())
+      super.readFiles(table, files)
+    }
+  }
+
+  private def scd2Table(wh: String): Unit =
+    Scd2.bulkInsert(new TableStore(spark, wh), "t",
+      Seq(("A", 1, "2022-01-01 00:00:00"), ("B", 1, "2022-01-01 00:00:00")).toDF("pk", "qty", "ts_s")
+        .withColumn("extraction_timestamp", to_timestamp(col("ts_s"))).drop("ts_s"))
+
+  private def scd2Delta(rows: (String, Int, String)*) =
+    rows.toDF("pk", "qty", "ts_s")
+      .withColumn("extraction_timestamp", to_timestamp(col("ts_s"))).drop("ts_s")
+
+  private def currentQty(store: TableStore): Seq[(String, Int)] =
+    store.read("t").filter(col("is_current")).select("pk", "qty")
+      .as[(String, Int)].collect().sorted.toSeq
+
+  Seq[(String, (TableStore, DataFrame) => Long)](
+    "scd2Complex" -> (Scd2.scd2Complex(_, "t", _)),
+    "scd2Simple" -> (Scd2.scd2Simple(_, "t", _))
+  ).foreach { case (name, merge) =>
+    test(s"$name replans when an append lands mid-merge; both land") {
+      val wh = java.nio.file.Files.createTempDirectory("graft_race_scd2").toString
+      scd2Table(wh)
+      val store = new RivalBeforeRead(wh)
+      val v0 = store.currentVersion("t")
+      store.rival = Some(() => {
+        new TableStore(spark, wh).append("t", Scd2.withScd2Columns(
+          scd2Delta(("C", 7, "2022-01-05 00:00:00"))))
+        ()
+      })
+      merge(store, scd2Delta(("A", 2, "2022-02-01 00:00:00")))
+      assert(store.rival.isEmpty, "the rival never ran")
+      assert(store.currentVersion("t") == v0 + 2)
+      assert(currentQty(store) == Seq(("A", 2), ("B", 1), ("C", 7)))
+      assert(store.read("t").count() == 4)
+    }
+  }
+
+  test("concurrent scd2Complex and appends all land") {
+    val wh = java.nio.file.Files.createTempDirectory("graft_race_scd2c").toString
+    scd2Table(wh)
+    val store = new TableStore(spark, wh)
+    race(3) {
+      case 0 =>
+        Scd2.scd2Complex(store, "t", scd2Delta(("A", 2, "2022-02-01 00:00:00"),
+          ("A", 3, "2022-03-01 00:00:00"), ("B", 5, "2022-01-15 00:00:00")))
+        ()
+      case w =>
+        store.append("t", Scd2.withScd2Columns(
+          scd2Delta((s"N$w", w, "2022-01-05 00:00:00"))))
+        ()
+    }
+    assert(currentQty(store) == Seq(("A", 3), ("B", 5), ("N1", 1), ("N2", 2)))
+    assert(store.read("t").count() == 7)
   }
 }
