@@ -84,6 +84,40 @@ object Bench {
     def reset(): Unit = { input.set(0L); shuffleWrite.set(0L); cpuNs.set(0L) }
   }
 
+  /** The bench's tuned session: [[GraftSession.builder]] plus AQE, a
+    * 64 MB broadcast threshold, 32 MB file splits and a 90 s cleaner.
+    * [[graft.tools.ProfileQuery]] profiles queries in the same session. */
+  def session(cores: Int): SparkSession.Builder =
+    GraftSession.builder(cores)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+      // Let AQE swap sort-merge for shuffled-hash when EVERY build-side
+      // partition is measured under this threshold — the analytic joins
+      // here are hash-friendly (DuckDB's default), and the conversion is
+      // scale-safe by construction: at 100× data the partitions exceed
+      // the bound and AQE leaves the sort-merge plan alone.
+      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "256m")
+      // 64 MB broadcast threshold (default 10 MB predates boxes like this
+      // one): a 2M-row projected dimension broadcasts and the fact side
+      // joins map-side with NO shuffle. Scale-safe by the same mechanism
+      // that makes the default safe — a dimension that outgrows the
+      // threshold at a bigger SF simply stops broadcasting.
+      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
+      // The fixtures are one parquet file per table; default 128 MB splits
+      // leave a 1.3 GB lineitem scanning on 11 of 32 cores and a 112 MB
+      // events table on ONE. 32 MB splits spread single-file scans wide;
+      // on a real multi-file layout at scale the knob is simply neutral
+      // (files already outnumber cores).
+      .config("spark.sql.files.maxPartitionBytes",
+        sys.env.getOrElse("SPARK_GRAFT_SPLIT_BYTES", "33554432"))
+      // Shuffle files on local disk are reclaimed only when the driver
+      // GCs the shuffle objects; the 30-min default periodic GC let a
+      // full run accumulate 55 GB of /tmp/blockmgr-* (measured r8),
+      // which first starved the page cache (the sf10 CoW cells ran 3x
+      // slow) and then ENOSPC'd the sf100 block. 90 s keeps the
+      // high-water mark near one section's working set.
+      .config("spark.cleaner.periodicGC.interval", "90s")
+
   /** Best-effort janitor for scratch warehouses orphaned by KILLED runs
     * (a SIGKILL skips every finally/shutdown hook): graft tools name all
     * their temp dirs `graft_*` / `tpcds-*` under java.io.tmpdir, so any
@@ -127,42 +161,8 @@ object Bench {
     }
     sweepStaleScratch(progress)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // Let AQE swap sort-merge for shuffled-hash when EVERY build-side
-      // partition is measured under this threshold — the analytic joins
-      // here are hash-friendly (DuckDB's default), and the conversion is
-      // scale-safe by construction: at 100× data the partitions exceed
-      // the bound and AQE leaves the sort-merge plan alone.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "256m")
-      // 64 MB broadcast threshold (default 10 MB predates boxes like this
-      // one): a 2M-row projected dimension broadcasts and the fact side
-      // joins map-side with NO shuffle. Scale-safe by the same mechanism
-      // that makes the default safe — a dimension that outgrows the
-      // threshold at a bigger SF simply stops broadcasting.
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      // The fixtures are one parquet file per table; default 128 MB splits
-      // leave a 1.3 GB lineitem scanning on 11 of 32 cores and a 112 MB
-      // events table on ONE. 32 MB splits spread single-file scans wide;
-      // on a real multi-file layout at scale the knob is simply neutral
-      // (files already outnumber cores).
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_SPLIT_BYTES", "33554432"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // Shuffle files on local disk are reclaimed only when the driver
-      // GCs the shuffle objects; the 30-min default periodic GC let a
-      // full run accumulate 55 GB of /tmp/blockmgr-* (measured r8),
-      // which first starved the page cache (the sf10 CoW cells ran 3x
-      // slow) and then ENOSPC'd the sf100 block. 90 s keeps the
-      // high-water mark near one section's working set.
-      .config("spark.cleaner.periodicGC.interval", "90s")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val cpus = GraftSession.cores
+    val spark = session(cpus).getOrCreate()
     // Mute ALL logging for the whole timed run (not only at exit): the
     // driver's tail is a combined stream, and any log line emitted after
     // the latest checkpoint print erodes the ~2000-char window the final
@@ -237,7 +237,7 @@ object Bench {
         if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
       }
       def cpuFrac: Double =
-        its.map(_.procCpuSec).sum / math.max(times.sum * cpus.toInt, 1e-9)
+        its.map(_.procCpuSec).sum / math.max(times.sum * cpus, 1e-9)
     }
 
     // Results accumulate INCREMENTALLY so the checkpoint line mid-loop
@@ -525,6 +525,12 @@ object Bench {
       }
       checkpoint()
     }
+    // A section whose input is absent says so in the progress log rather
+    // than finishing silently as "done in 0 s".
+    def inputFound(name: String, path: String): Boolean =
+      java.nio.file.Files.exists(java.nio.file.Paths.get(path)) || {
+        progress(s"$name SKIPPED: missing $path"); false
+      }
 
     // Snapshot-layer overhead vs raw parquet (BASELINE.md "Our BENCH
     // target": the snapshot layer should cost ≤~20% over raw Parquet
@@ -582,8 +588,7 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_CURATION_SCALES",
         "sf1:1,sf10:10,sf100:100:morcow"))
     val cIters = sys.env.getOrElse("SPARK_GRAFT_CURATION_ITERS", "2").toInt
-    val curationOk = !sys.env.contains("SPARK_GRAFT_SKIP_CURATION") &&
-      java.nio.file.Files.exists(java.nio.file.Paths.get(curationData))
+    val curationOn = !sys.env.contains("SPARK_GRAFT_SKIP_CURATION")
     var curationDone =
       Seq.empty[(String, Double, Seq[graft.tools.CurationBench.Cell])]
     def runCuration(scales: Seq[(String, Int, Boolean, Seq[Double])],
@@ -611,7 +616,8 @@ object Bench {
     // longer fits the window after the headline, and a 2-point curve in
     // the driver artifact beats the r8 hole.
     section("curation", estCleanS = 175) {
-      if (curationOk && curationScales.nonEmpty) {
+      if (curationOn && curationScales.nonEmpty &&
+          inputFound("curation", curationData)) {
         val fullNeed = 240 * slow * 1.2 + 90
         if (remainingS() >= fullNeed)
           runCuration(curationScales.take(1), Seq(0.001, 0.01, 0.1, 0.99), cIters)
@@ -635,9 +641,9 @@ object Bench {
     // wall budget for the sections that must still run after this one.
     def tpcdsSection(key: String, dirEnv: String, defaultDir: String,
         skipEnv: String, reserveS: Double): Unit = {
-      val dir = java.nio.file.Paths.get(sys.env.getOrElse(dirEnv, defaultDir))
-      if (sys.env.contains(skipEnv) ||
-          !java.nio.file.Files.isDirectory(dir)) ()
+      val dirName = sys.env.getOrElse(dirEnv, defaultDir)
+      val dir = java.nio.file.Paths.get(dirName)
+      if (sys.env.contains(skipEnv) || !inputFound(key, dirName)) ()
       else try {
         val base = tpcdsJsonRef.get
         val t0 = System.nanoTime()
@@ -741,7 +747,8 @@ object Bench {
     // the primary axis's decades outrank the tpcds ones; each scale
     // self-gates inside runAll on the pace-normalized budget.
     section("curation2", estCleanS = 200) {
-      if (curationOk && curationScales.size > 1)
+      if (curationOn && curationScales.size > 1 &&
+          inputFound("curation2", curationData))
         runCuration(curationScales.drop(1), Seq(0.001, 0.01, 0.1, 0.99), cIters)
     }
 

@@ -8,7 +8,7 @@ import org.apache.spark.sql.graft.{VectorCosine, VectorDot}
 /** Session-build-time injection of the engine's native SQL functions and
   * view DDL:
   * {{{
-  *   SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
+  *   GraftSession.builder().getOrCreate() // applies these extensions
   *   // or: spark.sql.extensions=graft.GraftExtensions
   * }}}
   * For sessions built elsewhere (e.g. the driver's), use

@@ -1,5 +1,6 @@
 package graft
 
+import graft.GraftSession.withConf
 import graft.core.{MatView, Merge, TableStore}
 import graft.curation.{Sampling, Scd2}
 import graft.ext.{Chunking, Clustering, Contamination, Dedup, Dsir, KMeans, Mixing, Multimodal, Packing, ProductQuantization, Redaction, Similarity, TextAnalysis}
@@ -224,21 +225,22 @@ object SparkEntry {
     try body(b) finally { b.unpersist(); () }
   }
 
-  /** Run a streaming replay with no-data micro-batches disabled. A
-    * watermark-only trigger pays the full per-trigger fixed cost
-    * (incremental re-plan, offset/commit-log writes, one state-store
-    * commit per partition per stateful op) and roughly DOUBLES the
-    * trigger count of a bounded replay. Only used where the final table
-    * provably does not depend on a trailing no-data flush: double-
-    * sentinel outer joins (the second sentinel's DATA batch flushes
-    * everything the first sentinel's watermark proved unmatched), inner
-    * interval joins and first-seen dedup (emit on data batches only). */
-  private def withoutNoDataBatches[T](s: SparkSession)(body: => T): T = {
-    val k = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = s.conf.get(k, "true")
-    s.conf.set(k, "false")
-    try body finally s.conf.set(k, prev)
-  }
+  /** [[withConf]] setting that runs a streaming replay with no-data
+    * micro-batches disabled. A watermark-only trigger pays the full
+    * per-trigger fixed cost (incremental re-plan, offset/commit-log
+    * writes, one state-store commit per partition per stateful op) and
+    * roughly DOUBLES the trigger count of a bounded replay. Only used
+    * where the final table provably does not depend on a trailing
+    * no-data flush: double-sentinel outer joins (the second sentinel's
+    * DATA batch flushes everything the first sentinel's watermark proved
+    * unmatched), inner interval joins and first-seen dedup (emit on data
+    * batches only). */
+  private val noDataBatchesOff =
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"
+
+  private val rocksDbStateStore =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Split a fixture frame into `n` contiguous event-time slices (replay
     * order = event-time order, so watermarks only move forward and no
@@ -462,9 +464,7 @@ object SparkEntry {
       // suits the fixture-scale state — the dominant cost is per-partition
       // state-store commit files per micro-batch, not data volume. The
       // conf stays set for the whole feed and is restored after stop().
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try withoutNoDataBatches(s) {
+      withConf(s, "spark.sql.shuffle.partitions" -> "8", noDataBatchesOff) {
         val q = agg.writeStream
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
           .option("checkpointLocation", ckpt)
@@ -490,7 +490,7 @@ object SparkEntry {
               "__sentinel", 0.0))
               .toDF("event_id", "ts", "event_type", "value")))
         } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       store.read("win")
         .filter(col("event_type") =!= "__sentinel")
         .select(col("window_start"), col("event_type"), col("n_events"),
@@ -1582,9 +1582,7 @@ object SparkEntry {
       val uniq = graft.streaming.CdcStream.dedupFirstWithinWatermark(
         keyed, Seq("user_id", "event_type", "day"), "48 hours")
       val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try withoutNoDataBatches(s) {
+      withConf(s, "spark.sql.shuffle.partitions" -> "8", noDataBatchesOff) {
         val q = uniq.writeStream
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
           .option("checkpointLocation", ckpt)
@@ -1600,7 +1598,7 @@ object SparkEntry {
           .start()
         try replay.feedSlices(q, ev, "ts", 3)
         finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       store.read("uniq")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_unique"))
@@ -1789,13 +1787,11 @@ object SparkEntry {
       val joined = graft.streaming.CdcStream.intervalJoin(
         lr.source, rr.source, "user_id", "ts", "1 HOUR", "48 hours")
       val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
       // 4 state partitions: the interval join keeps BOTH sides' state, and
       // the dominant anchor cost is per-partition state-store commit files
       // per micro-batch (each feed = one batch × partitions × 2 sides),
       // not data volume — see the q68 note.
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try withoutNoDataBatches(s) {
+      withConf(s, "spark.sql.shuffle.partitions" -> "4", noDataBatchesOff) {
         val q = joined.writeStream
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
           .option("checkpointLocation", ckpt)
@@ -1818,7 +1814,7 @@ object SparkEntry {
             q.processAllAvailable()
           }
         } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       store.read("pairs")
         .groupBy(col("r_event_type").as("r_type"))
         .agg(count(lit(1)).as("n_pairs"), dsumd(col("value")).as("total_l_value"))
@@ -1843,9 +1839,7 @@ object SparkEntry {
       val sessions = graft.streaming.CdcStream.sessionize(
         replay.source.as[graft.streaming.Event], gapMinutes = 30, "1 hour")
       val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try withoutNoDataBatches(s) {
+      withConf(s, "spark.sql.shuffle.partitions" -> "8", noDataBatchesOff) {
         val q = sessions.toDF().writeStream
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
           .option("checkpointLocation", ckpt)
@@ -1874,7 +1868,7 @@ object SparkEntry {
                 .toDF("user_id", "ts", "event_type", "value"))
           }
         } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       store.read("sess")
         .filter(col("user_id") =!= -1L)
         .groupBy(col("user_id"))
@@ -2107,13 +2101,11 @@ object SparkEntry {
           .filterNot(_.partitionValues.get("event_type").contains(minType))
           .map(_.path).toSet
       val before = otherFiles()
-      val modeKey = "spark.sql.sources.partitionOverwriteMode"
-      val prev = s.conf.get(modeKey)
-      s.conf.set(modeKey, "dynamic")
-      try s.sql(s"INSERT OVERWRITE $cat.ns.ev " +
-        s"SELECT event_id, event_type, value + 500 AS value " +
-        s"FROM $view WHERE event_type = '$minType'")
-      finally s.conf.set(modeKey, prev)
+      withConf(s, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+        s.sql(s"INSERT OVERWRITE $cat.ns.ev " +
+          s"SELECT event_id, event_type, value + 500 AS value " +
+          s"FROM $view WHERE event_type = '$minType'")
+      }
       val untouchedKept = otherFiles() == before &&
         store.manifests("ev").maxBy(_.version).operation == "overwrite_dynamic"
       s.table(s"$cat.ns.ev")
@@ -2353,14 +2345,11 @@ object SparkEntry {
       s.conf.set(s"spark.sql.catalog.$cat",
         classOf[graft.catalog.GraftCatalog].getName)
       s.conf.set(s"spark.sql.catalog.$cat.warehouse", store.warehouse)
-      val confs = Seq(
-        "spark.sql.sources.v2.bucketing.enabled" -> "true",
-        "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-        "spark.sql.adaptive.enabled" -> "false")
-      val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-      confs.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
+      withConf(s,
+          "spark.sql.sources.v2.bucketing.enabled" -> "true",
+          "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.sql.adaptive.enabled" -> "false") {
         val joined = s.sql(
           s"""SELECT o.o_orderstatus, l.l_extendedprice
              |FROM $cat.ns.ord o JOIN $cat.ns.li l
@@ -2381,9 +2370,6 @@ object SparkEntry {
           .orderBy(col("o_orderstatus"))
           // materialize INSIDE the conf window so the exec plan is SPJ's
           .localCheckpoint(true)
-      } finally prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
       }
     }),
 
@@ -2730,9 +2716,7 @@ object SparkEntry {
       val sink = tmpStore(s)
       val nBatches = new java.util.concurrent.atomic.AtomicLong(0L)
       val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         val q = s.readStream.option("maxVersionsPerTrigger", "1")
           .table(s"$cat.ns.ev")
           .writeStream
@@ -2748,7 +2732,7 @@ object SparkEntry {
           }
           .start()
         try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       sink.read("out").groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           dsumd(col("value")).as("total_value"))
@@ -4025,9 +4009,7 @@ object SparkEntry {
         lr.source, rr.source, "user_id", "ts", "1 HOUR", "48 hours",
         joinType = "leftOuter")
       val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try withoutNoDataBatches(s) {
+      withConf(s, "spark.sql.shuffle.partitions" -> "4", noDataBatchesOff) {
         val q = joined.writeStream
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
           .option("checkpointLocation", ckpt)
@@ -4060,7 +4042,7 @@ object SparkEntry {
             Seq(rr.stage(sentinel(20)), lr.stage(sentinel(20))))
           q.processAllAvailable()
         } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       store.read("enriched").orderBy(col("event_id"), col("r_event_type"))
     }),
 
@@ -4528,9 +4510,7 @@ object SparkEntry {
         lr.source, rr.source, "user_id", "ts", "1 HOUR", "48 hours",
         joinType = "fullOuter")
       val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try withoutNoDataBatches(s) {
+      withConf(s, "spark.sql.shuffle.partitions" -> "4", noDataBatchesOff) {
         val q = joined.writeStream
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
           .option("checkpointLocation", ckpt)
@@ -4566,7 +4546,7 @@ object SparkEntry {
             Seq(rr.stage(sentinel(20)), lr.stage(sentinel(20))))
           q.processAllAvailable()
         } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       store.read("joined")
         .orderBy(col("user_id"), col("l_event_id"), col("r_event_id"))
     }),
@@ -4773,13 +4753,7 @@ object SparkEntry {
       val profiles = graft.streaming.StatefulOps.runningProfiles(
         replay.source.as[graft.streaming.Event])
       val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val prevProv = s.conf.getOption(provKey)
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      withConf(s, rocksDbStateStore, "spark.sql.shuffle.partitions" -> "8") {
         val q = profiles.toDF().writeStream
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
           .option("checkpointLocation", ckpt)
@@ -4794,12 +4768,6 @@ object SparkEntry {
           .start()
         try timeSlices(ev, "ts", 3).foreach(replay.feed(q, _))
         finally q.stop()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        prevProv match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None => s.conf.unset(provKey)
-        }
       }
       store.read("prof")
         .groupBy(col("user_id"))
@@ -4953,13 +4921,8 @@ object SparkEntry {
         watermarkDelay = "0 seconds")
       val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
       val sinkName = "q188_sink"
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val prevProv = s.conf.getOption(provKey)
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try withoutNoDataBatches(s) {
+      withConf(s, rocksDbStateStore, "spark.sql.shuffle.partitions" -> "8",
+          noDataBatchesOff) {
         val q = expiries.toDF().writeStream.format("memory")
           .queryName(sinkName)
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
@@ -4978,12 +4941,6 @@ object SparkEntry {
               .toDF("user_id", "ts", "event_type", "value"))
           }
         } finally q.stop()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        prevProv match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None => s.conf.unset(provKey)
-        }
       }
       s.table(sinkName)
         .filter(col("user_id") >= 0)
@@ -5052,11 +5009,9 @@ object SparkEntry {
       // sf0.01 is small enough for AQE to coalesce the range shuffle to
       // one partition; pin it so the multi-file layout is observable
       // (at real scale the shuffle is many partitions regardless)
-      val coalKey = "spark.sql.adaptive.coalescePartitions.enabled"
-      val prevCoal = s.conf.get(coalKey, "true")
-      s.conf.set(coalKey, "false")
-      try s.sql(s"INSERT INTO $cat.ns.t SELECT * FROM q190_src")
-      finally s.conf.set(coalKey, prevCoal)
+      withConf(s, "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+        s.sql(s"INSERT INTO $cat.ns.t SELECT * FROM q190_src")
+      }
       val m = store.manifests("t").maxBy(_.version)
       val ranges = m.files.flatMap(_.stats.get("okey"))
         .map(cs => (cs.min.toLong, cs.max.toLong)).sortBy(_._1)

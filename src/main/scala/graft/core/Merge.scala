@@ -28,12 +28,11 @@ import org.apache.spark.sql.functions._
   * Scale: the outer join shuffles both sides, however small the source
   * (a `full_outer` join never broadcasts), and the cardinality check,
   * when on, shuffles the join output once more; the rest is a map-side
-  * projection. [[MergeBuilder.withSmallSourceMaxRows]] opts small sources
-  * into a plan that broadcasts the source keys instead. Copy-on-write is
-  * file-level by default ([[MergeBuilder.withFileLevelRewrite]]): only the
-  * files [[TableStore.filesHitByKeys]] cannot rule out are read and
-  * rewritten, and the rest carry into the new snapshot untouched
-  * (SURVEY.md §4 "MERGE physical strategy").
+  * projection. Copy-on-write is file-level by default
+  * ([[MergeBuilder.withFileLevelRewrite]]): only the files
+  * [[TableStore.filesHitByKeys]] cannot rule out are read and rewritten,
+  * and the rest carry into the new snapshot untouched (SURVEY.md §4
+  * "MERGE physical strategy").
   *
   * In clause conditions/assignments, refer to source columns with
   * [[Merge.source]] and to target columns by plain name.
@@ -70,8 +69,6 @@ final class MergeBuilder private[core] (store: TableStore, table: String) {
   private var schemaEvolution = false
   private var lineage: Option[(String, String)] = None
   private var retries = 3
-  private var smallSourceMaxRows = 0L
-  private var smallSrcActive = false
 
   def using(source: DataFrame): this.type = { src = source; this }
 
@@ -148,48 +145,10 @@ final class MergeBuilder private[core] (store: TableStore, table: String) {
     fileRewrite = enabled; this
   }
 
-  /** Low-shuffle merge threshold (rows): a `full_outer` join can never
-    * broadcast, so the classic merge plan shuffles the WHOLE target even
-    * for a 0.1% delta. Sources at or under this row count take the
-    * low-shuffle path instead (Delta's low-shuffle-merge shape): the
-    * target is pre-split with BROADCAST semi/anti joins on the source
-    * keys, untouched rows bypass the join entirely as map-only carries,
-    * and the full_outer runs on the touched slice alone — the target is
-    * never shuffled.
-    *
-    * DEFAULT 0 (off): the classic plan wins the common layouts.
-    * Measured A/B grid (`graft.tools.MergeAb`, 29M-row store_sales
-    * targets, ~112k-row deltas, plus the r8 end-to-end scd2 A/B):
-    *  - KEY-LOCALIZED delta: classic wins (6.6 vs 7.8 s) — file-level
-    *    `filesHitByKeys` pruning already shrinks the join for BOTH
-    *    plans, so the pre-split only adds its probe cost;
-    *  - staged SCD2 merges (multi-reference sources): classic wins
-    *    (23.4 vs 41.7 s at sf10 p=0.001) — the pre-split re-evaluates
-    *    the expensive staged source;
-    *  - SCATTERED small delta on a pk-clustered table: LOW-SHUFFLE
-    *    WINS decisively (see SURVEY §6 r9 record) — min/max pruning is
-    *    defeated, so classic shuffles the whole wide table for a
-    *    0.4% delta while the pre-split carries untouched rows map-only.
-    * Opt in for that last shape: a simple merge whose delta is small
-    * and key-scattered over a layout range pruning cannot help.
-    * `.plan()` runs the SAME sizing decision as `run()`, so
-    * `.plan().explain()` shows the join strategy the merge will use. */
-  def withSmallSourceMaxRows(n: Long): this.type = {
-    require(n >= 0, "threshold must be non-negative")
-    smallSourceMaxRows = n; this
-  }
-
-  /** Build the merged snapshot without committing (plan inspection/tests).
-    * Runs the same source-sizing decision as [[run]] (a `count` when the
-    * low-shuffle opt-in is armed) so the returned frame's plan is the one
-    * a real merge would execute — the documented `.plan().explain()`
-    * evidence workflow depends on it. */
-  def plan(): DataFrame = {
-    smallSrcActive = smallSourceMaxRows > 0 && src != null &&
-      (try src.count() <= smallSourceMaxRows catch { case _: Throwable => false })
+  /** Build the merged snapshot without committing (plan inspection/tests). */
+  def plan(): DataFrame =
     planAgainst(evolve(store.read(table)),
       store.manifests(table).maxBy(_.version).version + 1)
-  }
 
   /** Append source-only columns (nullable) to the target when schema
     * evolution is on; identity otherwise. */
@@ -245,31 +204,12 @@ final class MergeBuilder private[core] (store: TableStore, table: String) {
       t0.withColumn("__tid", monotonically_increasing_id()) else t0
     val joinCond = keys.map { case (tk, sk) => t(tk) === s(SrcPrefix + sk) }
       .reduce(_ && _) && extraOn.getOrElse(lit(true))
-    // Low-shuffle path (small sources only — runOnce sizes the source):
-    // pre-split the target on the source KEY SET with broadcast
-    // semi/anti joins. Rows whose keys appear nowhere in the source can
-    // never match under joinCond (extraOn only further restricts), so
-    // they are pure KEEP carries that skip the join; the full_outer
-    // then pairs the touched slice (≤ |source| matches) with the
-    // source — small × small, no target shuffle anywhere. Null source
-    // keys (the SCD2 staged legs) never equi-match on either plan.
-    val (joined0, keepRows) =
-      if (!smallSrcActive) (t.join(s, joinCond, "full_outer"), None)
-      else {
-        val sKeys = s
-          .select(keys.map { case (_, sk) => col(SrcPrefix + sk) }: _*)
-          .distinct()
-        val keyCond = keys.map { case (tk, sk) =>
-          t(tk) === sKeys(SrcPrefix + sk) }.reduce(_ && _)
-        val touched = t.join(broadcast(sKeys), keyCond, "left_semi")
-        val keep = t.join(broadcast(sKeys), keyCond, "left_anti")
-        (touched.join(s, joinCond, "full_outer"), Some(keep))
-      }
+    val outer = t.join(s, joinCond, "full_outer")
 
     val isMatched = col("__tgt_exists").isNotNull && col(SrcPrefix + "__exists").isNotNull
     val isSrcOnly = col("__tgt_exists").isNull && col(SrcPrefix + "__exists").isNotNull
 
-    val joined1 = if (cardinalityCheck) {
+    val joined = if (cardinalityCheck) {
       // Unmatched-source rows carry a null __tid; coalescing onto the
       // source key hash spreads them across window partitions instead of
       // one all-null straggler (their matched-count is 0 by definition,
@@ -279,23 +219,13 @@ final class MergeBuilder private[core] (store: TableStore, table: String) {
         xxhash64(keys.map { case (_, sk) => col(SrcPrefix + sk) }: _*))
       val nMatch = count(when(isMatched, lit(1)))
         .over(Window.partitionBy(pkey))
-      joined0
+      outer
         .withColumn("__nmatch", nMatch)
         .filter(assert_true(col("__nmatch") <= 1, lit(
           s"MERGE into $table: a target row is matched by more than one source row"))
           .isNull)
         .drop("__nmatch", "__tid")
-    } else joined0
-    // Union the carries AFTER the cardinality window, so the window's
-    // shuffle sees only the touched slice — a carried row has zero
-    // matches by construction. Missing source-side columns null-fill,
-    // which the action logic already reads as "unmatched".
-    val joined = keepRows match {
-      case Some(keep) =>
-        val k = if (cardinalityCheck) keep.drop("__tid") else keep
-        joined1.unionByName(k, allowMissingColumns = true)
-      case None => joined1
-    }
+    } else outer
 
     // First-matching-clause-wins action column, in declaration order.
     val srcCols = src.columns.toSet
@@ -376,23 +306,6 @@ final class MergeBuilder private[core] (store: TableStore, table: String) {
     // replan loop re-reads the rival's snapshot) instead of being
     // silently dropped by an allocate-past-it commit.
     val base = store.manifests(table).maxBy(_.version)
-    // Opt-in low-shuffle only: size the source once to pick the join
-    // strategy. persist() BEFORE the count so the sizing pass fills the
-    // cache — the plan's three references (key broadcast ×2, join side)
-    // then reuse it instead of re-running a possibly table-scanning
-    // staging query. Threshold 0 (the default) skips the sizing pass
-    // entirely — the classic plan needs no count.
-    val srcRows =
-      if (smallSourceMaxRows <= 0) Long.MaxValue
-      else {
-        src.persist()
-        try src.count() catch { case _: Throwable => Long.MaxValue }
-      }
-    smallSrcActive = srcRows <= smallSourceMaxRows
-    if (smallSourceMaxRows > 0 && !smallSrcActive) {
-      try { src.unpersist(); () } catch { case _: Throwable => () }
-    }
-    try {
     val pruned =
       if (fileRewrite && keys.nonEmpty) {
         val (tk, sk) = keys.head
@@ -415,12 +328,6 @@ final class MergeBuilder private[core] (store: TableStore, table: String) {
         val merged = planAgainst(evolve(store.read(table)), base.version + 1)
         store.commitFiles(table, Seq.empty, Some(merged), "merge", spec,
           Seq.empty, baseVersion = base.version)
-    }
-    } finally {
-      if (smallSrcActive) {
-        try { src.unpersist(); () } catch { case _: Throwable => () }
-        smallSrcActive = false
-      }
     }
   }
 }

@@ -1152,18 +1152,6 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     (filesInRange(m, column, lower, upper).size, m.files.size)
   }
 
-  /** Split the current snapshot's files into (hit, untouched) for a key
-    * range — the planning primitive of file-level copy-on-write MERGE.
-    * Files without stats are conservatively "hit"; null bounds (empty
-    * source) hit nothing. */
-  def filesOverlapping(table: String, column: String, lower: Any, upper: Any)
-      : (Seq[FileEntry], Seq[FileEntry]) = {
-    val m = manifests(table).maxBy(_.version)
-    if (lower == null || upper == null) (Seq.empty, m.files)
-    else m.files.partition(fe =>
-      fe.stats.get(column).forall(overlaps(_, lower, upper)))
-  }
-
   /** Read an explicit subset of the current snapshot's files. */
   def readFiles(table: String, files: Seq[FileEntry]): DataFrame =
     readManifest(table, manifests(table).maxBy(_.version).copy(files = files))
@@ -1772,7 +1760,9 @@ class TableStore(spark: SparkSession, val warehouse: String) {
   def compactWhere(table: String, column: String, lower: Any, upper: Any,
       targetFileBytes: Long = 128L * 1024 * 1024): Long = {
     val m = manifests(table).maxBy(_.version)
-    val (hit, kept) = filesOverlapping(table, column, lower, upper)
+    if (lower == null || upper == null) return m.version
+    val (hit, kept) = m.files.partition(fe =>
+      fe.stats.get(column).forall(overlaps(_, lower, upper)))
     if (hit.isEmpty) return m.version
     val df = readFiles(table, hit)
     val want = math.max(1, math.ceil(

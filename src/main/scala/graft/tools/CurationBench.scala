@@ -557,10 +557,7 @@ object CurationBench {
       .getOrElse(Seq(0.001, 0.01, 0.1, 0.99))
     require(props.nonEmpty && props.forall(p => p > 0 && p <= 1),
       s"proportions must be in (0,1]: got ${props.mkString(",")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = graft.GraftSession.builder()
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.cleaner.periodicGC.interval", "90s") // bound /tmp/blockmgr-*
       // zstd shuffle: the sf100 CoW merge's shuffle files coexist with
@@ -568,8 +565,6 @@ object CurationBench {
       // lz4 on the md5-pk-dominated rows, which is the difference
       // between fitting this sandbox's disk and ENOSPC
       .config("spark.io.compression.codec", "zstd")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val iters = sys.env.getOrElse("SPARK_GRAFT_CURATION_ITERS", "2").toInt

@@ -3,15 +3,18 @@ package graft.tools
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
-/** Dev-only per-job profiler for one SparkEntry query: runs the query in a
-  * Bench-identical session and prints every Spark job's wall time, task
-  * count and description, so the time budget of multi-job queries
-  * (streaming replays, iterative fixpoints, bounded collects) can be read
-  * job by job instead of guessed (optimization guide §1/§7).
+/** Dev-only per-job and per-trigger profiler for SparkEntry queries: runs
+  * each query in the bench's session ([[graft.Bench.session]]) and prints
+  * every Spark job's wall time and description, plus every streaming
+  * trigger's `durationMs` map (addBatch / getBatch / latestOffset /
+  * queryPlanning / walCommit / commitOffsets / triggerExecution) — the
+  * non-job time a job log cannot see. So the time budget of multi-job
+  * queries (streaming replays, iterative fixpoints, bounded collects) can
+  * be read job by job instead of guessed.
   *
-  * Usage: runMain graft.tools.ProfileQuery <queryName> [sfDir] [reps]
+  * Usage: runMain graft.tools.ProfileQuery <queryName[,name2]> [sfDir] [reps]
   */
 object ProfileQuery {
 
@@ -46,24 +49,22 @@ object ProfileQuery {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "256m")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_SPLIT_BYTES", "33554432"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.cleaner.periodicGC.interval", "90s")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.Bench.session(graft.GraftSession.cores).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val log = new JobLog
     spark.sparkContext.addSparkListener(log)
+    spark.streams.addListener(new StreamingQueryListener {
+      override def onQueryStarted(
+          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(
+          e: StreamingQueryListener.QueryProgressEvent): Unit = {
+        val p = e.progress
+        println(s"[profile]   trigger batch=${p.batchId} rows=${p.numInputRows} " +
+          s"durationMs=${p.durationMs}")
+      }
+      override def onQueryTerminated(
+          e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    })
     name.split(",").map(_.trim).filter(_.nonEmpty).foreach { q =>
       // warmup at the smallest scale, as the bench does
       try graft.SparkEntry.queries(q)(spark, "/root/testdata/sf0.001").count()

@@ -136,15 +136,10 @@ object TpcdsTime {
   def main(args: Array[String]): Unit = {
     val dataDir = Paths.get(args.headOption.getOrElse("fixtures/tpcds-sf0.01"))
     val iters = args.lift(1).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = graft.GraftSession.builder()
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.cleaner.periodicGC.interval", "90s") // bound /tmp/blockmgr-*
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

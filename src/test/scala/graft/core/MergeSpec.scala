@@ -116,81 +116,20 @@ class MergeSpec extends SparkSpec {
           .withCardinalityCheck(check)
           .withFileLevelRewrite(false)
           .run()
-        Thread.sleep(300) // let events drain on the listener bus
+        // let events drain on the listener bus: wait for the first, then
+        // give any later one the same 300 ms
+        val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+        while (execs.get() == 0 && System.nanoTime() < deadline) Thread.sleep(20)
+        Thread.sleep(300)
         execs.get()
       } finally spark.listenerManager.unregister(listener)
     }
     val without = mergeExecs(false)
     val withCheck = mergeExecs(true)
-    // <= 2 tolerates the opt-in source-sizing probe (src.count); with the
-    // default classic plan the merge is a single execution. The invariant
-    // under test is that the CHECK adds nothing: the cardinality window
-    // rides the merge's own execution either way.
-    assert(withCheck == without && withCheck <= 2,
+    // The merge is a single execution (the write of the merged snapshot);
+    // the cardinality window rides it rather than adding a probe.
+    assert(withCheck == without && withCheck == 1,
       s"cardinality check must not add an execution: with=$withCheck without=$without")
-  }
-
-  test("low-shuffle small-source path matches the classic full_outer plan") {
-    // Same merge, both strategies: threshold 0 forces the classic
-    // full_outer join; the default takes the broadcast pre-split path
-    // (touched slice joins, untouched rows carry map-only). Result sets
-    // must be identical — updates, conditional delete, inserts, keeps.
-    val store = freshStore()
-    def result(maxRows: Long, tbl: String): Seq[(Int, String)] = {
-      store.commit(tbl,
-        (1 to 1000).map(i => (i, s"v$i")).toDF("id", "s"), "create")
-      Merge.into(store, tbl)
-        .using(Seq((3, "u3"), (500, "DEL"), (2000, "n2000")).toDF("id", "s"))
-        .on(Seq("id"))
-        .whenMatchedDelete(condition = Some(Merge.source("s") === "DEL"))
-        .whenMatchedUpdate()
-        .whenNotMatchedInsert()
-        .withSmallSourceMaxRows(maxRows)
-        .run()
-      store.read(tbl).as[(Int, String)].collect().sorted.toSeq
-    }
-    val classic = result(0L, "lsm_classic")
-    val fast = result(5000000L, "lsm_fast")
-    assert(fast == classic)
-    assert(fast.size == 1000) // 999 kept/updated + 1 delete + 1 insert
-    assert(fast.contains((3, "u3")) && fast.contains((2000, "n2000")) &&
-      !fast.exists(_._1 == 500))
-  }
-
-  test("plan() runs the same sizing decision as run() for the low-shuffle opt-in") {
-    // The documented evidence workflow is .plan().explain() — so plan()
-    // must show the join strategy run() would pick, not always classic.
-    val store = freshStore()
-    store.commit("lsm_plan",
-      (1 to 500).map(i => (i, s"v$i")).toDF("id", "s"), "create")
-    def mb(thr: Long) = Merge.into(store, "lsm_plan")
-      .using(Seq((1, "x")).toDF("id", "s"))
-      .on(Seq("id"))
-      .whenMatchedUpdate()
-      .whenNotMatchedInsert()
-      .withSmallSourceMaxRows(thr)
-    val classic = mb(0L).plan().queryExecution.optimizedPlan.toString
-    val low = mb(5000000L).plan().queryExecution.optimizedPlan.toString
-    assert(!classic.contains("LeftSemi"),
-      "threshold 0 must plan the classic full_outer merge")
-    assert(low.contains("LeftSemi"),
-      "an armed threshold with a tiny source must plan the pre-split")
-  }
-
-  test("low-shuffle path still enforces the cardinality check") {
-    val store = freshStore()
-    store.commit("lsm_card",
-      (1 to 50).map(i => (i, s"v$i")).toDF("id", "s"), "create")
-    val e = intercept[Exception] {
-      Merge.into(store, "lsm_card")
-        .using(Seq((7, "a"), (7, "b")).toDF("id", "s"))
-        .on(Seq("id"))
-        .whenMatchedUpdate()
-        .whenNotMatchedInsert()
-        .withSmallSourceMaxRows(5000000L) // exercise the opt-in path
-        .run()
-    }
-    assert(e.getMessage != null)
   }
 
   test("file-level copy-on-write: untouched files carry into the new snapshot unrewritten") {
