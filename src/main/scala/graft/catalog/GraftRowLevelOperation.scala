@@ -144,7 +144,7 @@ class GraftRowLevelOperation(spark: SparkSession, catalogName: String,
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     StoreWrite.cowBuilder(warehouse, tableName, info,
-      cmd.toString.toLowerCase, () => keptFiles)
+      cmd.toString.toLowerCase, () => keptFiles, manifest.version)
 
   private def fileMayMatch(stats: Map[String, ColStats], f: Filter): Boolean =
     StatsFilter.fileMayMatch(stats, f)

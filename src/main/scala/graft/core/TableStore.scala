@@ -8,6 +8,7 @@ import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
@@ -27,13 +28,23 @@ import scala.jdk.CollectionConverters._
   *   <warehouse>/<table>/_current               # pointer file: latest N
   * }}}
   *
-  * Commit protocol: write data dir → write manifest → atomically swap the
-  * `_current` pointer (tmp file + rename). Readers resolve the pointer once
-  * and then only touch immutable paths, so reads are never torn. Single
-  * writer assumed (the reference's Athena workgroup made the same
-  * assumption); on a real cluster the pointer swap would be a catalog
-  * compare-and-swap, and all paths go through the Hadoop FileSystem API so
-  * the same code runs on HDFS/S3A.
+  * Commit protocol (optimistic, many writers): a commit reads its BASE
+  * snapshot once, writes its data files, and publishes the base's
+  * successor — version base + 1, carrying everything it does not change
+  * ([[TableStore.Manifest.next]]) — through one tail, [[publish]]: a
+  * create-exclusive manifest write, then a swap of the `_current`
+  * pointer. The manifest is the commit: two writers racing to the same
+  * version both write, only one create lands, and the loser gets a
+  * [[TableStore.CommitConflictException]] — a rival is never silently
+  * dropped. `_current` is only a read cache of the newest manifest;
+  * readers resolve it once and then touch only immutable paths, so reads
+  * are never torn. Rewrite-shaped commits (merge, update, delete,
+  * compaction, alters) surface the conflict, since what they keep was
+  * decided against the old base; append-shaped commits (append, MoR
+  * deltas, publish) retry against the new base. On a real cluster the
+  * create-exclusive write would be a catalog compare-and-swap; all paths
+  * go through the Hadoop FileSystem API so the same code runs on
+  * HDFS/S3A.
   *
   * Scale notes: the manifest records per-file row counts and sizes so
   * planning (e.g. compaction sizing, future min/max file pruning) never
@@ -49,59 +60,110 @@ class TableStore(spark: SparkSession, val warehouse: String) {
 
   private def tableDir(t: String) = new Path(warehouse, t)
   private def versionDir(t: String, v: Long) = new Path(tableDir(t), s"v=$v")
-  private def manifestPath(t: String, v: Long) =
-    new Path(new Path(tableDir(t), "_manifests"), s"$v.json")
+  private def manifestDir(t: String) = new Path(tableDir(t), "_manifests")
+  private def manifestPath(t: String, v: Long) = new Path(manifestDir(t), s"$v.json")
   private def currentPtr(t: String) = new Path(tableDir(t), "_current")
 
-  /** Latest committed version, or 0 if the table does not exist. The
-    * `_current` pointer is a read-fast CACHE of the authoritative value —
-    * the max manifest version (manifests are create-exclusive and never
-    * rewritten; rollback commits a NEW version, so max is always current).
-    * Any pointer read anomaly therefore falls back to the manifest
-    * listing: momentary absence (atomicWrite deletes before rename on
+  /** The newest manifest version on disk (0 for none) — the authoritative
+    * head: manifests are create-exclusive and never rewritten, and
+    * rollback commits a NEW version, so the max is always current. */
+  private def listedVersion(table: String): Long = {
+    val dir = manifestDir(table)
+    val f = fs(dir)
+    if (!f.exists(dir)) 0L
+    else f.listStatus(dir).map(_.getPath.getName)
+      .collect { case n if n.endsWith(".json") => n.stripSuffix(".json").toLong }
+      .foldLeft(0L)(math.max)
+  }
+
+  /** The version the `_current` read cache holds, or None when it cannot
+    * be read: momentary absence (atomicWrite deletes before rename on
     * filesystems without overwrite-rename), a torn read, or local
     * ChecksumFileSystem's `.crc` side-file racing the swap's rename (the
     * data file and its checksum rename separately, so a concurrent reader
     * can pair new bytes with the old checksum — observed as a flaky
     * ChecksumException under a streaming reader + concurrent commits). */
-  /** Version a WRITER's next commit attempt should target, minus one.
-    * The `_current` pointer is a read cache that can lag the newest
-    * manifest mid-race (the winner commits its manifest before swapping
-    * the pointer), so a loser allocating from the pointer alone would
-    * re-collide on already-taken versions until the swap lands. Commit
-    * paths take the max of the pointer and the manifest listing — the
-    * listing is authoritative for allocation. */
-  private def latestCommittedVersion(table: String): Long = {
-    val dir = new Path(tableDir(table), "_manifests")
-    val f = fs(dir)
-    val listed =
-      if (!f.exists(dir)) 0L
-      else f.listStatus(dir).map(_.getPath.getName)
-        .collect { case n if n.endsWith(".json") => n.stripSuffix(".json").toLong }
-        .foldLeft(0L)(math.max)
-    math.max(currentVersion(table), listed)
-  }
-
-  def currentVersion(table: String): Long = {
+  private def pointerVersion(table: String): Option[Long] = {
     val p = currentPtr(table)
     val f = fs(p)
-    def fromManifests: Long = {
-      val dir = new Path(tableDir(table), "_manifests")
-      if (!f.exists(dir)) 0L
-      else f.listStatus(dir).map(_.getPath.getName)
-        .collect { case n if n.endsWith(".json") => n.stripSuffix(".json").toLong }
-        .foldLeft(0L)(math.max)
-    }
-    if (!f.exists(p)) fromManifests
+    if (!f.exists(p)) None
     else
       try {
         val in = f.open(p)
-        try scala.io.Source.fromInputStream(in).mkString.trim.toLong
+        try Some(scala.io.Source.fromInputStream(in).mkString.trim.toLong)
         finally in.close()
       } catch {
-        case _: java.io.IOException | _: NumberFormatException => fromManifests
+        case _: java.io.IOException | _: NumberFormatException => None
       }
   }
+
+  /** Latest committed version, or 0 if the table does not exist: the
+    * `_current` cache, falling back to the manifest listing whenever the
+    * cache cannot be read. */
+  def currentVersion(table: String): Long =
+    pointerVersion(table).getOrElse(listedVersion(table))
+
+  /** The snapshot a commit builds on: the table's newest manifest — not
+    * the `_current` cache, which lags mid-race (the winner writes its
+    * manifest before swapping the pointer) — or the empty version 0 of a
+    * table with none. `pinned` (when ≥ 0) is the version the caller
+    * PLANNED against: a newer head means a rival landed since, so the
+    * commit conflicts here, before writing anything, instead of carrying
+    * a file list decided against an older snapshot onto the rival's. */
+  private def head(table: String, pinned: Long = -1L): Manifest = {
+    val m = manifests(table).lastOption.getOrElse(Manifest.emptyAt(0L))
+    if (pinned >= 0L && m.version != pinned)
+      throw new TableStore.CommitConflictException(
+        s"$table: planned on version $pinned, but version ${m.version} is committed")
+    m
+  }
+
+  /** The one commit tail: write `m`'s manifest create-exclusive (a rival
+    * that already took `m.version` makes this throw
+    * [[TableStore.CommitConflictException]]), then advance `_current`.
+    * Returns the committed version. */
+  private def publish(table: String, m: Manifest): Long = {
+    writeManifest(table, m)
+    swapPointer(table, m.version)
+    m.version
+  }
+
+  /** `base`'s successor holding `kept` ∪ `added` — the carry rule of
+    * every commit that replaces the file list. Constraints, write order,
+    * column map, schema and partition spec carry as they are.
+    *
+    * Dropped-column tombstones carry while prior files do: otherwise
+    * DROP COLUMN x → append → ADD COLUMN x would pass alterTable's
+    * resurrection guard and read stale physical x values out of the
+    * carried files. With no kept files every file postdates the drop.
+    *
+    * A merge-on-read delete file at sequence `s` masks rows only in data
+    * files with a SMALLER sequence, so it carries while some kept file is
+    * older than it — dropping it would resurrect deleted rows. Once every
+    * kept file's sequence is ≥ `s` (a rewrite replaced every older file,
+    * reading through the overlay), it is dead: full rewrites (compact,
+    * unfiltered CoW) shed the whole overlay, partial rewrites shed
+    * exactly the overlay they materialized. */
+  private def successor(base: Manifest, operation: String, kept: Seq[FileEntry],
+      added: Seq[FileEntry]): Manifest = {
+    val minKeptSeq =
+      if (kept.isEmpty || base.deleteFiles.isEmpty) Long.MaxValue
+      else kept.map(fe => fileSeqOf(fe.path)).min
+    base.next(operation).copy(files = kept ++ added,
+      droppedColumns = if (kept.isEmpty) Seq.empty else base.droppedColumns,
+      deleteFiles = base.deleteFiles.filter(_.seq > minKeptSeq))
+  }
+
+  private def schemaOf(json: String): StructType =
+    DataType.fromJson(json).asInstanceOf[StructType]
+
+  /** `df` projected onto `schema` by name: each column cast to its stored
+    * type, a column the batch lacks as null. */
+  private def alignTo(df: DataFrame, schema: StructType): DataFrame =
+    df.select(schema.fields.toSeq.map { f =>
+      if (df.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
+      else lit(null).cast(f.dataType).as(f.name)
+    }: _*)
 
   def exists(table: String): Boolean = currentVersion(table) > 0
 
@@ -123,8 +185,8 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     * (reference/docs/README.md:123-129). Footers are read where the commit
     * runs; on a cluster this is a tiny metadata task per file, mergeable
     * into the write job via a commit protocol later.
-    */
-  /** `bloomColumns` turns on parquet bloom filters for those columns in
+    *
+    * `bloomColumns` turns on parquet bloom filters for those columns in
     * the written files — the pruning story for RANDOM keys (md5-style
     * surrogate pks), where min/max ranges overlap every file and
     * [[filesHitByKeys]] would otherwise rewrite the whole table on every
@@ -179,21 +241,19 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     * over from a previous manifest — file paths are version-qualified, so
     * nothing is copied) ∪ the freshly-written `newData`. This is what makes
     * file-level MERGE rewrite possible (SURVEY.md §4 "MERGE physical
-    * strategy"): untouched files cost zero I/O in the commit. */
-  /** `baseVersion` (when ≥ 0) pins the snapshot this commit was PLANNED
-    * against: the new snapshot is exactly `baseVersion + 1`, so a rival
-    * landing in between reliably trips the create-exclusive CAS instead
-    * of being silently overwritten by a commit that allocated past it
-    * (kept-file decisions were made against `baseVersion`; committing
-    * them onto any later snapshot would drop the rival's files). Leave
-    * unset only for content-independent commits. */
+    * strategy"): untouched files cost zero I/O in the commit.
+    *
+    * `baseVersion` (when ≥ 0) pins the snapshot this commit was PLANNED
+    * against: kept-file decisions were made against it, so committing
+    * them onto any later snapshot would drop a rival's files — a newer
+    * head conflicts instead. Leave unset only for content-independent
+    * commits. */
   def commitFiles(table: String, keptFiles: Seq[FileEntry],
       newData: Option[DataFrame], operation: String,
       partitionBy: Seq[String] = Seq.empty,
       bloomColumns: Seq[String] = Seq.empty,
       baseVersion: Long = -1L): Long = {
-    val v =
-      (if (baseVersion >= 0L) baseVersion else latestCommittedVersion(table)) + 1
+    val base = head(table, baseVersion)
     val newEntries = newData match {
       case Some(df) =>
         // Unique per-writer subdir: two writers racing to the same next
@@ -202,52 +262,15 @@ class TableStore(spark: SparkSession, val warehouse: String) {
         // rival's files mid-write. The loser's completed files become
         // orphans in the winner's version dir (removeOrphanFiles
         // collects); fileSeqOf still parses the leading `v=N/`.
-        val wid = java.util.UUID.randomUUID().toString.take(8)
-        writeDataFiles(new Path(versionDir(table, v), s"w-$wid"),
-          s"v=$v/w-$wid",
-          applyWriteOrder(table, enforceConstraints(table, df), partitionBy),
-          partitionBy, bloomColumns, columnMapCarry(table).toMap)
+        val rel = s"v=${base.version + 1}/w-${java.util.UUID.randomUUID().toString.take(8)}"
+        writeDataFiles(new Path(tableDir(table), rel), rel,
+          applyWriteOrder(base.writeOrder, checked(df, base.constraints), partitionBy),
+          partitionBy, bloomColumns, base.columnMap.toMap)
       case None => Seq.empty
     }
-    val files = keptFiles ++ newEntries
-    val schemaJson = newData.map(_.schema.json)
-      .orElse(manifests(table).lastOption.map(_.schemaJson))
-      .getOrElse("{}")
-    val spec =
-      if (partitionBy.nonEmpty) partitionBy
-      else manifests(table).lastOption.map(_.partitionBy).getOrElse(Seq.empty)
-    writeManifest(table, Manifest(v, System.currentTimeMillis(), operation,
-      files.map(_.rowCount).sum, files, schemaJson, spec,
-      droppedColumnsCarry(table, keptFiles),
-      deleteFilesCarry(table, keptFiles),
-      constraints = constraintsCarry(table),
-      writeOrder = writeOrderCarry(table),
-      columnMap = columnMapCarry(table)))
-    swapPointer(table, v)
-    v
-  }
-
-  /** Like dropped-column tombstones, merge-on-read delete files must
-    * survive every commit that carries prior data files forward (append,
-    * CoW merge of a file subset) — dropping them would resurrect deleted
-    * rows in the carried files. A full rewrite (no kept files) reads
-    * through the MoR view, so its output already excludes the dead rows
-    * and the delete files are materialized away. */
-  /** Equality-delete files to carry into the next snapshot. A delete file
-    * at sequence `s` masks rows only in data files with a SMALLER file
-    * sequence — so once every kept file's sequence is ≥ `s` (a rewrite
-    * replaced every older file, materializing the masked rows away), the
-    * delete file is dead and is dropped here: full rewrites (compact /
-    * unfiltered CoW) shed the whole MoR overlay, partial rewrites shed
-    * exactly the overlay they materialized. */
-  private def deleteFilesCarry(table: String,
-      keptFiles: Seq[FileEntry]): Seq[DeleteEntry] = {
-    val dels = manifests(table).lastOption.map(_.deleteFiles).getOrElse(Seq.empty)
-    if (dels.isEmpty || keptFiles.isEmpty) Seq.empty
-    else {
-      val minKeptSeq = keptFiles.map(fe => TableStore.fileSeqOf(fe.path)).min
-      dels.filter(_.seq > minKeptSeq)
-    }
+    publish(table, successor(base, operation, keptFiles, newEntries).copy(
+      schemaJson = newData.fold(base.schemaJson)(_.schema.json),
+      partitionBy = if (partitionBy.nonEmpty) partitionBy else base.partitionBy))
   }
 
   /** Write `df`'s parquet files under `dataDir` and harvest their manifest
@@ -268,14 +291,11 @@ class TableStore(spark: SparkSession, val warehouse: String) {
       if (colMap.isEmpty) dfLogical
       else dfLogical.select(dfLogical.columns.toSeq.map(c =>
         col(c).as(colMap.getOrElse(c, c))): _*)
-    val statRev: Map[String, String] = colMap.map(_.swap)
     // Write timestamps as TIMESTAMP_MICROS *for store files only*:
     // INT96 (Spark's session default) has no orderable footer stats.
     // Scoped set-and-restore so the session's own writes are untouched.
-    val key = "spark.sql.parquet.outputTimestampType"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "TIMESTAMP_MICROS")
-    try {
+    graft.GraftSession.withConf(spark,
+        "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
       val bloomOpts = bloomColumns
         .map(c => s"parquet.bloom.filter.enabled#${colMap.getOrElse(c, c)}" ->
           "true").toMap
@@ -294,68 +314,41 @@ class TableStore(spark: SparkSession, val warehouse: String) {
           .partitionBy(partitionBy.map(c => s"__p_$c"): _*)
           .parquet(dataDir.toString)
       }
-    } finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
     }
-    // Partition-directory values are only foldable into min=max stats
-    // when the path rendering round-trips through the comparison domain.
-    // Timestamps do NOT (path "2024-01-01 00:00:00" vs literal
-    // ".0"-suffixed toString — utf8Cmp would prune every file of the
-    // matching partition); decimals are ambiguous ("1.5" vs "1.50").
-    // Those kinds yield None: the partition value is still recorded in
-    // `partitionValues`, just never used for stat pruning.
-    // Transform partition values DO fold: temporal/truncate renderings are
-    // fixed-width order-preserving strings the writer itself computed (the
-    // path value IS the comparison-domain value), and a hidden-computed
-    // bucket value is an exact long.
-    val kinds: Map[String, Option[String]] = statKindsOf(dfLogical.schema) ++
-      partitionBy.filterNot(df.columns.contains).flatMap { c => c match {
-        case TableStore.DaysRe(_) | TableStore.MonthsRe(_) |
-             TableStore.HoursRe(_) | TableStore.YearsRe(_) |
-             TableStore.TruncRe(_, _) =>
-          Some(c -> Some("string"))
-        case TableStore.BucketRe(_, _) => Some(c -> Some("long"))
-        case _ => None
-      }}.toMap
+    val kinds = statKinds(dfLogical.schema, partitionBy)
     val f = fs(dataDir)
     val qualified = f.makeQualified(dataDir).toString
     harvestInParallel(listPartFiles(dataDir, f)) { s =>
       val rel = f.makeQualified(s.getPath).toString.stripPrefix(qualified)
         .stripPrefix("/")
-      val pvals = partitionValuesOf(rel)
-      val (rows, statsPhys) = footerStats(s.getPath)
-      val stats =
-        if (statRev.isEmpty) statsPhys
-        else statsPhys.map { case (k, v) => statRev.getOrElse(k, k) -> v }
-      // partition value = exact min=max stat for every pruning path
-      val pstats = pvals.flatMap {
-        case (c, pv) if pv != "__HIVE_DEFAULT_PARTITION__" =>
-          // identity partition dir: every row holds exactly this value,
-          // so the column has zero nulls in this file by construction
-          kinds.get(c).flatten.map(k => c -> ColStats(pv, pv, k, 0L))
-        case _ => None
-      }
-      FileEntry(s"$relPrefix/$rel", s.getLen, rows, stats ++ pstats, pvals)
+      fileEntry(s.getPath, s"$relPrefix/$rel", rel, s.getLen, kinds, colMap)
     }
   }
 
-  /** The dropped-column tombstones of the prior snapshot must survive any
-    * commit that carries pre-drop files forward (append, MERGE, SCD2,
-    * staged SQL writes) — otherwise the sequence DROP COLUMN x → append →
-    * ADD COLUMN x would pass alterTable's resurrection guard and read
-    * stale physical x values out of the carried-over files. Resetting is
-    * safe only when the new snapshot references no prior files (full
-    * overwrite / compaction rewrite): every file then postdates the drop
-    * and cannot contain the dropped name. */
-  private def droppedColumnsCarry(table: String,
-      keptFiles: Seq[FileEntry]): Seq[String] =
-    if (keptFiles.isEmpty) Seq.empty
-    else manifests(table).lastOption.map(_.droppedColumns).getOrElse(Seq.empty)
-
-  /** Declared write sort order, carried like the partition spec. */
-  private def writeOrderCarry(table: String): Seq[String] =
-    manifests(table).lastOption.map(_.writeOrder).getOrElse(Seq.empty)
+  /** The manifest entry of data file `p`, recorded as `path`: footer row
+    * count and stats — re-keyed from the pinned physical names of
+    * `colMap` to logical ones — plus the partition tuple parsed from its
+    * `__p_<col>=<value>/` directories (`rel`, relative to the write's
+    * root), folded in as exact min=max stats where `kinds` gives the
+    * column a comparison domain, so every pruning path skips
+    * non-matching partitions. */
+  private def fileEntry(p: Path, path: String, rel: String, len: Long,
+      kinds: Map[String, Option[String]], colMap: Map[String, String]): FileEntry = {
+    val (rows, statsPhys) = footerStats(p)
+    val statRev = colMap.map(_.swap)
+    val stats =
+      if (statRev.isEmpty) statsPhys
+      else statsPhys.map { case (k, v) => statRev.getOrElse(k, k) -> v }
+    val pvals = partitionValuesOf(rel)
+    val pstats = pvals.flatMap {
+      case (c, pv) if pv != "__HIVE_DEFAULT_PARTITION__" =>
+        // identity partition dir: every row holds exactly this value,
+        // so the column has zero nulls in this file by construction
+        kinds.get(c).flatten.map(k => c -> ColStats(pv, pv, k, 0L))
+      case _ => None
+    }
+    FileEntry(path, len, rows, stats ++ pstats, pvals)
+  }
 
   /** Apply the table's declared write order to an outgoing batch
     * (Iceberg's `WRITE ORDERED BY`): unpartitioned writes range-cluster
@@ -367,9 +360,9 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     * one-shot `rewriteSorted`, paid at write time instead of by a
     * maintenance rewrite. Order columns missing from the batch schema
     * (pre-evolution writers) are ignored. */
-  private def applyWriteOrder(table: String, df: DataFrame,
+  private def applyWriteOrder(writeOrder: Seq[String], df: DataFrame,
       partitionBy: Seq[String]): DataFrame = {
-    val order = writeOrderCarry(table).filter(df.columns.contains)
+    val order = writeOrder.filter(df.columns.contains)
     if (order.isEmpty) df
     else if (partitionBy.nonEmpty)
       df.sortWithinPartitions((partitionBy ++ order).map(col): _*)
@@ -382,52 +375,34 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     * path applies it. */
   def setWriteOrder(table: String, cols: Seq[String]): Long = {
     val m = manifests(table).maxBy(_.version)
-    val schema = org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val schema = schemaOf(m.schemaJson)
     cols.foreach(c => require(schema.fieldNames.contains(c),
       s"write-order column $c not in table schema"))
-    val v = m.version + 1
-    writeManifest(table, m.copy(version = v,
-      timestampMs = System.currentTimeMillis(), operation = "alter",
-      streamEpoch = None, writeOrder = cols))
-    swapPointer(table, v)
-    v
+    publish(table, m.next("alter").copy(writeOrder = cols))
   }
 
-  def writeOrderOf(table: String): Seq[String] = writeOrderCarry(table)
+  def writeOrderOf(table: String): Seq[String] = head(table).writeOrder
 
-  /** CHECK constraints carry through every commit like the partition
-    * spec — dropping them on a rewrite would silently stop enforcement. */
-  private def constraintsCarry(table: String): Seq[(String, String)] =
-    manifests(table).lastOption.map(_.constraints).getOrElse(Seq.empty)
-
-  /** Column-mapping entries to carry into the next snapshot (logical name
-    * -> pinned physical name; identity entries are never stored). Like
-    * constraints, the map survives every commit shape — files written
-    * before AND after a rename share one physical name per field. */
-  private def columnMapCarry(table: String): Seq[(String, String)] =
-    manifests(table).lastOption.map(_.columnMap).getOrElse(Seq.empty)
-
-  /** logical -> physical column translation for `table`'s current map. */
+  /** logical -> physical column translation for `table`'s current map
+    * (identity entries are never stored). Like constraints, the map
+    * survives every commit shape — files written before AND after a
+    * rename share one physical name per field. */
   def columnMapOf(table: String): Map[String, String] =
-    columnMapCarry(table).toMap
+    head(table).columnMap.toMap
 
-  /** Wrap `df` so every row is validated against the table's CHECK
-    * constraints INSIDE the write job (one pass, no pre-scan): the filter
-    * evaluates per row and `raise_error` aborts the job on the first
-    * violation — Delta's invariant-check semantics. A predicate that is
-    * NULL for a row passes (SQL-standard CHECK). */
-  private def enforceConstraints(table: String, df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{expr, raise_error, when}
-    import org.apache.spark.sql.functions.{lit => flit}
-    constraintsCarry(table).foldLeft(df) { case (d, (nm, pred)) =>
-      d.filter(
-        when(expr(pred) <=> flit(false),
-          raise_error(flit(s"CHECK constraint $nm violated: $pred"))
-            .cast("boolean"))
-          .otherwise(flit(true)))
+  /** `df` validated row by row against CHECK `constraints` INSIDE the job
+    * that consumes it (one pass, no pre-scan): the filter evaluates per
+    * row and `raise_error` aborts the job on the first violation —
+    * Delta's invariant-check semantics. A predicate that is NULL for a
+    * row passes (SQL-standard CHECK). `violation` words the error. */
+  private def checked(df: DataFrame, constraints: Seq[(String, String)],
+      violation: (String, String) => String =
+        (nm, pred) => s"CHECK constraint $nm violated: $pred"): DataFrame =
+    constraints.foldLeft(df) { case (d, (nm, pred)) =>
+      d.filter(functions.when(functions.expr(pred) <=> lit(false),
+        functions.raise_error(lit(violation(nm, pred))).cast("boolean"))
+        .otherwise(lit(true)))
     }
-  }
 
   /** Add a named CHECK constraint (Delta `ADD CONSTRAINT`): validates the
     * predicate against ALL existing rows first (one filter pass — a
@@ -441,21 +416,9 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     require(!m.constraints.exists(_._1 == name),
       s"constraint $name already exists on $table")
     // validate existing data: the raise_error filter throws on violation
-    val probe = read(table)
-    import org.apache.spark.sql.functions.{expr, raise_error, when}
-    import org.apache.spark.sql.functions.{lit => flit}
-    probe.filter(
-      when(expr(predicateSql) <=> flit(false),
-        raise_error(flit(s"existing rows violate CHECK $name ($predicateSql)"))
-          .cast("boolean"))
-        .otherwise(flit(true))).count()
-    val v = m.version + 1
-    writeManifest(table, m.copy(version = v,
-      timestampMs = System.currentTimeMillis(), operation = "alter",
-      streamEpoch = None,
-      constraints = m.constraints :+ (name -> predicateSql)))
-    swapPointer(table, v)
-    v
+    checked(read(table), Seq(name -> predicateSql),
+      (nm, pred) => s"existing rows violate CHECK $nm ($pred)").count()
+    publish(table, m.next("alter").copy(constraints = m.constraints :+ (name -> predicateSql)))
   }
 
   /** Drop a CHECK constraint (metadata-only). */
@@ -463,17 +426,13 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     val m = manifests(table).maxBy(_.version)
     require(m.constraints.exists(_._1 == name),
       s"no constraint $name on $table")
-    val v = m.version + 1
-    writeManifest(table, m.copy(version = v,
-      timestampMs = System.currentTimeMillis(), operation = "alter",
-      streamEpoch = None,
-      constraints = m.constraints.filterNot(_._1 == name)))
-    swapPointer(table, v)
-    v
+    publish(table, m.next("alter").copy(constraints = m.constraints.filterNot(_._1 == name)))
   }
 
+  /** CHECK constraints carry through every commit like the partition
+    * spec — dropping them on a rewrite would silently stop enforcement. */
   def checkConstraints(table: String): Seq[(String, String)] =
-    constraintsCarry(table)
+    head(table).constraints
 
   /** Expectation-routing append (DLT's `expect_or_drop`-with-quarantine):
     * rows violating any CHECK constraint land in `quarantineTable` —
@@ -532,21 +491,33 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     buf.toSeq.sortBy(_.getPath.toString)
   }
 
-  /** Stat-comparison domain per column for folding partition-directory
-    * values into min=max stats. Types whose path rendering does not
-    * round-trip through the comparison domain (timestamps, decimals)
-    * yield None — see the commitFiles comment. */
-  private def statKindsOf(schema: org.apache.spark.sql.types.StructType)
-      : Map[String, Option[String]] =
+  /** Stat-comparison domain per partition column of `schema` and
+    * `partitionBy`, for folding partition-directory values into min=max
+    * stats. They fold only when the path rendering round-trips through
+    * the comparison domain. Timestamps do NOT (path "2024-01-01 00:00:00"
+    * vs literal ".0"-suffixed toString — utf8Cmp would prune every file
+    * of the matching partition); decimals are ambiguous ("1.5" vs
+    * "1.50"). Those kinds yield None: the partition value is still
+    * recorded in `partitionValues`, just never used for stat pruning.
+    * Transform partition values DO fold: temporal/truncate renderings are
+    * fixed-width order-preserving strings the writer itself computed (the
+    * path value IS the comparison-domain value), and a hidden-computed
+    * bucket value is an exact long. */
+  private def statKinds(schema: StructType, partitionBy: Seq[String])
+      : Map[String, Option[String]] = {
+    import org.apache.spark.sql.types._
     schema.fields.map(f => f.name -> (f.dataType match {
-      case _: org.apache.spark.sql.types.ByteType | _: org.apache.spark.sql.types.ShortType |
-           _: org.apache.spark.sql.types.IntegerType | _: org.apache.spark.sql.types.LongType => Some("long")
-      case _: org.apache.spark.sql.types.FloatType | _: org.apache.spark.sql.types.DoubleType => Some("double")
-      case _: org.apache.spark.sql.types.StringType | _: org.apache.spark.sql.types.DateType => Some("string")
+      case _: ByteType | _: ShortType | _: IntegerType | _: LongType => Some("long")
+      case _: FloatType | _: DoubleType => Some("double")
+      case _: StringType | _: DateType => Some("string")
       case _ => None
-    })).toMap
+    })).toMap ++ partitionBy.filterNot(schema.fieldNames.contains).collect {
+      case c @ (DaysRe(_) | MonthsRe(_) | HoursRe(_) | YearsRe(_) | TruncRe(_, _)) =>
+        c -> Some("string")
+      case c @ BucketRe(_, _) => c -> Some("long")
+    }
+  }
 
-  /** Parse `__p_<col>=<value>` segments of a version-relative path. */
   /** Partition tuple encoded in a version-relative file path's
     * `__p_<col>=<value>/` directories (empty for unpartitioned layouts).
     * Public because the DSv2 write path parses staged paths with it when
@@ -564,13 +535,9 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     * `partitionBy` declares an identity partition spec that subsequent
     * staged SQL writes lay out and prune by. */
   def createEmpty(table: String, schemaJson: String,
-      partitionBy: Seq[String] = Seq.empty): Long = {
-    val v = latestCommittedVersion(table) + 1
-    writeManifest(table, Manifest(v, System.currentTimeMillis(), "create",
-      0L, Seq.empty, schemaJson, partitionBy))
-    swapPointer(table, v)
-    v
-  }
+      partitionBy: Seq[String] = Seq.empty): Long =
+    publish(table, Manifest.emptyAt(head(table).version).next("create")
+      .copy(schemaJson = schemaJson, partitionBy = partitionBy))
 
   /** Partition evolution (Iceberg's headline spec flexibility): change the
     * table's partition spec METADATA-ONLY — no byte of data moves.
@@ -589,8 +556,7 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     val ms = manifests(table)
     require(ms.nonEmpty, s"table $table does not exist")
     val m = ms.maxBy(_.version)
-    val schema = org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val schema = schemaOf(m.schemaJson)
     partitionBy.foreach {
       case TableStore.BucketRe(n, c) =>
         require(n.toInt > 0 && schema.fieldNames.contains(c),
@@ -616,13 +582,7 @@ class TableStore(spark: SparkSession, val warehouse: String) {
       case c => require(schema.fieldNames.contains(c),
         s"partition column $c is not in the table schema")
     }
-    val v = m.version + 1
-    writeManifest(table, m.copy(version = v,
-      timestampMs = System.currentTimeMillis(),
-      operation = "set-partition-spec", partitionBy = partitionBy,
-      streamEpoch = None))
-    swapPointer(table, v)
-    v
+    publish(table, m.next("set-partition-spec").copy(partitionBy = partitionBy))
   }
 
   /** Rollback (time travel made current): a NEW snapshot that duplicates
@@ -640,19 +600,10 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     val target = ms.find(_.version == toVersion).getOrElse(
       throw new IllegalArgumentException(
         s"table $table has no version $toVersion"))
-    val v = ms.map(_.version).max + 1
-    writeManifest(table, target.copy(version = v,
-      timestampMs = System.currentTimeMillis(), operation = "rollback",
-      streamEpoch = None))
-    swapPointer(table, v)
-    v
+    // the target's content, re-based onto the head as its successor
+    publish(table, target.copy(version = ms.last.version).next("rollback"))
   }
 
-  /** Schema evolution (ALTER TABLE): a metadata-only commit that carries
-    * every data file forward and swaps the snapshot schema. Reads resolve
-    * columns by name against the stored schema, so added columns surface
-    * as null in old files and dropped/renamed columns disappear without
-    * touching a byte of data — Iceberg's schema-evolution semantics. */
   /** Safe type promotions for schema evolution (Iceberg's rules): a
     * column's type may only WIDEN — narrowing or domain changes would
     * corrupt reads of existing files resolved by name. */
@@ -671,16 +622,18 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     }
   }
 
+  /** Schema evolution (ALTER TABLE): a metadata-only commit that carries
+    * every data file forward and swaps the snapshot schema. Reads resolve
+    * columns by name against the stored schema, so added columns surface
+    * as null in old files and dropped/renamed columns disappear without
+    * touching a byte of data — Iceberg's schema-evolution semantics. */
   def evolveSchema(table: String, schemaJson: String,
       newlyDropped: Seq[String] = Seq.empty): Long = {
     val m = manifests(table).maxBy(_.version)
     // every surviving column must keep its type or widen it safely;
     // additions and removals are free (name-resolved reads null/skip)
-    val oldSchema = org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val newSchema = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    newSchema.fields.foreach { f =>
+    val oldSchema = schemaOf(m.schemaJson)
+    schemaOf(schemaJson).fields.foreach { f =>
       oldSchema.fields.find(_.name == f.name).foreach { o =>
         require(safePromotion(o.dataType, f.dataType),
           s"unsafe type change for $table.${f.name}: " +
@@ -688,13 +641,8 @@ class TableStore(spark: SparkSession, val warehouse: String) {
             "(only widening promotions are allowed)")
       }
     }
-    val v = m.version + 1
-    writeManifest(table, m.copy(version = v,
-      timestampMs = System.currentTimeMillis(), operation = "alter",
-      schemaJson = schemaJson,
+    publish(table, m.next("alter").copy(schemaJson = schemaJson,
       droppedColumns = (m.droppedColumns ++ newlyDropped).distinct))
-    swapPointer(table, v)
-    v
   }
 
   /** ALTER TABLE … ALTER COLUMN TYPE without rewriting a byte of data —
@@ -724,8 +672,7 @@ class TableStore(spark: SparkSession, val warehouse: String) {
   def widenColumnType(table: String, column: String,
       newType: org.apache.spark.sql.types.DataType): Long = {
     val m = manifests(table).maxBy(_.version)
-    val schema = org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val schema = schemaOf(m.schemaJson)
     val field = schema.fields.find(_.name == column).getOrElse(
       throw new IllegalArgumentException(
         s"widenColumnType: no column $column in $table"))
@@ -737,28 +684,19 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     require(m.deleteFiles.isEmpty,
       s"widenColumnType: $table carries merge-on-read delete files; " +
         "compact it first")
-    val transformSources = m.partitionBy.map {
-      case TableStore.BucketRe(_, c) => c
-      case TableStore.DaysRe(c) => c
-      case TableStore.MonthsRe(c) => c
-      case TableStore.HoursRe(c) => c
-      case TableStore.YearsRe(c) => c
-      case TableStore.TruncRe(_, c) => c
-      case c => c
-    }
-    require(!transformSources.contains(column),
+    require(!partitionSources(m).contains(column),
       s"widenColumnType: $column is a partition/transform source column")
-    val newSchema = org.apache.spark.sql.types.StructType(schema.fields.map(
+    val newSchema = StructType(schema.fields.map(
       f => if (f.name == column) f.copy(dataType = newType) else f))
-    val v = m.version + 1
-    writeManifest(table, m.copy(version = v,
-      timestampMs = System.currentTimeMillis(),
-      operation = s"widen_column $column " +
-        s"${field.dataType.simpleString}->${newType.simpleString}",
-      schemaJson = newSchema.json))
-    swapPointer(table, v)
-    v
+    publish(table, m.next(s"widen_column $column " +
+        s"${field.dataType.simpleString}->${newType.simpleString}")
+      .copy(schemaJson = newSchema.json))
   }
+
+  /** The schema columns `m`'s partition spec reads: identity columns and
+    * transform sources. */
+  private def partitionSources(m: Manifest): Seq[String] =
+    m.partitionBy.map(pc => TableStore.transformSource(pc).getOrElse(pc))
 
   /** ALTER TABLE … RENAME COLUMN without rewriting a byte of data —
     * Delta's column mapping (mode=name) / Iceberg's field-id rename,
@@ -780,8 +718,7 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     * physical name, or an existing physical pin. */
   def renameColumn(table: String, oldName: String, newName: String): Long = {
     val m = manifests(table).maxBy(_.version)
-    val schema = org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val schema = schemaOf(m.schemaJson)
     require(schema.fieldNames.contains(oldName),
       s"renameColumn: no column $oldName in $table")
     require(!schema.fieldNames.exists(_.equalsIgnoreCase(newName)),
@@ -789,16 +726,7 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     require(m.deleteFiles.isEmpty,
       s"renameColumn: $table carries merge-on-read delete files; " +
         "compact it first")
-    val transformSources = m.partitionBy.map {
-      case TableStore.BucketRe(_, c) => c
-      case TableStore.DaysRe(c) => c
-      case TableStore.MonthsRe(c) => c
-      case TableStore.HoursRe(c) => c
-      case TableStore.YearsRe(c) => c
-      case TableStore.TruncRe(_, c) => c
-      case c => c
-    }
-    require(!transformSources.contains(oldName),
+    require(!partitionSources(m).contains(oldName),
       s"renameColumn: $oldName is a partition/transform source column")
     val word = s"\\b${java.util.regex.Pattern.quote(oldName)}\\b".r
     require(!m.constraints.exists(c => word.findFirstIn(c._2).isDefined),
@@ -810,7 +738,7 @@ class TableStore(spark: SparkSession, val warehouse: String) {
         "would shadow tombstoned physical data")
     val cmap = m.columnMap.toMap
     val phys = cmap.getOrElse(oldName, oldName)
-    val newSchema = org.apache.spark.sql.types.StructType(schema.fields.map(
+    val newSchema = StructType(schema.fields.map(
       f => if (f.name == oldName) f.copy(name = newName) else f))
     val newMap = ((cmap - oldName) +
       (newName -> phys)).filter { case (l, ph) => l != ph }.toSeq.sortBy(_._1)
@@ -819,13 +747,8 @@ class TableStore(spark: SparkSession, val warehouse: String) {
         fe.copy(stats = fe.stats.map { case (k, vv) =>
           (if (k == oldName) newName else k) -> vv })
       else fe)
-    val v = m.version + 1
-    writeManifest(table, m.copy(version = v,
-      timestampMs = System.currentTimeMillis(),
-      operation = s"rename_column $oldName->$newName",
-      files = rekeyed, schemaJson = newSchema.json, columnMap = newMap))
-    swapPointer(table, v)
-    v
+    publish(table, m.next(s"rename_column $oldName->$newName")
+      .copy(files = rekeyed, schemaJson = newSchema.json, columnMap = newMap))
   }
 
   /** Commit parquet files already written by an external writer (the DSv2
@@ -836,82 +759,51 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     * files under `__p_<col>=<value>/` subdirectories, whose partition
     * tuples are parsed and folded into the per-file stats exactly like
     * [[commitFiles]]'s partitioned layout, so SQL-written partitions prune
-    * identically to library-written ones. */
+    * identically to library-written ones. `baseVersion` pins the commit
+    * like [[commitFiles]]' — checked before any staged file moves, so a
+    * conflicting commit leaves its files under staging for the write's
+    * abort to remove. */
   def commitStaged(table: String, keptFiles: Seq[FileEntry],
       staged: Seq[(Path, String)], operation: String, schemaJson: String,
-      streamEpoch: Option[(String, Long)] = None): Long = {
+      streamEpoch: Option[(String, Long)] = None, baseVersion: Long = -1L): Long = {
     // Exactly-once for streaming sinks: a replayed epoch (driver restart
     // re-running a batch whose commit already landed) is a no-op. Checked
     // here, not in the sink, so every retry path hits the ledger.
     streamEpoch.foreach { case (qid, e) =>
       if (lastStreamEpoch(table, qid).exists(_ >= e)) return currentVersion(table)
     }
-    val v = latestCommittedVersion(table) + 1
-    val dataDir = versionDir(table, v)
-    val f = fs(dataDir)
-    f.mkdirs(dataDir)
-    val kinds: Map[String, Option[String]] =
-      (try statKindsOf(org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-      catch { case _: Throwable => Map.empty[String, Option[String]] }) ++
-      // transform partition values fold as stats exactly like
-      // writeDataFiles' partitioned layout (fixed-width order-preserving
-      // renderings; exact bucket longs)
-      manifests(table).lastOption.map(_.partitionBy).getOrElse(Seq.empty[String])
-        .flatMap { (c: String) => c match {
-          case TableStore.DaysRe(_) | TableStore.MonthsRe(_) |
-               TableStore.HoursRe(_) | TableStore.YearsRe(_) |
-               TableStore.TruncRe(_, _) =>
-            Some(c -> Some("string"))
-          case TableStore.BucketRe(_, _) => Some(c -> Some("long"))
-          case _ => None
-        }}.toMap
-    val cmap = columnMapCarry(table).toMap
-    val statRev: Map[String, String] = cmap.map(_.swap)
+    val base = head(table, baseVersion)
+    val schema = scala.util.Try(schemaOf(schemaJson)).getOrElse(new StructType())
+    val cmap = base.columnMap.toMap
     // staged files were written by the caller's job (DSv2 INSERT /
     // streaming sink), so per-row enforcement couldn't ride the write —
     // validate them with one bounded read of the STAGING paths, BEFORE
     // the rename loop, so a violation aborts with the files still under
     // staging and the v=N directory (which the next commit reuses) stays
     // empty of orphans.
-    if (constraintsCarry(table).nonEmpty && staged.nonEmpty) {
-      val schema = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      enforceConstraints(table, toLogical(
-        spark.read.schema(physSchemaOf(schema, cmap)).parquet(
-          staged.map(_._1.toString): _*),
-        schema, cmap)).count()
-    }
-    val newEntries = harvestInParallel(staged) { case (p, rel) =>
+    if (base.constraints.nonEmpty && staged.nonEmpty)
+      checked(toLogical(spark.read.schema(physSchemaOf(schema, cmap))
+        .parquet(staged.map(_._1.toString): _*), schema, cmap), base.constraints).count()
+    val added = moveStaged(table, base.version + 1, staged,
+      statKinds(schema, base.partitionBy), cmap)
+    publish(table, successor(base, operation, keptFiles, added)
+      .copy(schemaJson = schemaJson, streamEpoch = streamEpoch))
+  }
+
+  /** Move `staged` (absolute, version-relative) files into version `v`'s
+    * directory — a same-FS rename, no data copy — and harvest their
+    * entries. */
+  private def moveStaged(table: String, v: Long, staged: Seq[(Path, String)],
+      kinds: Map[String, Option[String]], colMap: Map[String, String]): Seq[FileEntry] = {
+    val dataDir = versionDir(table, v)
+    val f = fs(dataDir)
+    f.mkdirs(dataDir)
+    harvestInParallel(staged) { case (p, rel) =>
       val dest = new Path(dataDir, rel)
       f.mkdirs(dest.getParent)
       require(f.rename(p, dest), s"failed to move staged file $p")
-      val (rows, statsPhys) = footerStats(dest)
-      val stats =
-        if (statRev.isEmpty) statsPhys
-        else statsPhys.map { case (k, v) => statRev.getOrElse(k, k) -> v }
-      val pvals = partitionValuesOf(rel)
-      val pstats = pvals.flatMap {
-        case (c, pv) if pv != "__HIVE_DEFAULT_PARTITION__" =>
-          // identity partition dir: every row holds exactly this value,
-          // so the column has zero nulls in this file by construction
-          kinds.get(c).flatten.map(k => c -> ColStats(pv, pv, k, 0L))
-        case _ => None
-      }
-      FileEntry(s"v=$v/$rel", f.getFileStatus(dest).getLen, rows,
-        stats ++ pstats, pvals)
+      fileEntry(dest, s"v=$v/$rel", rel, f.getFileStatus(dest).getLen, kinds, colMap)
     }
-    val files = keptFiles ++ newEntries
-    writeManifest(table, Manifest(v, System.currentTimeMillis(), operation,
-      files.map(_.rowCount).sum, files, schemaJson,
-      manifests(table).lastOption.map(_.partitionBy).getOrElse(Seq.empty),
-      droppedColumnsCarry(table, keptFiles),
-      deleteFilesCarry(table, keptFiles), streamEpoch,
-      constraints = constraintsCarry(table),
-      writeOrder = writeOrderCarry(table),
-      columnMap = columnMapCarry(table)))
-    swapPointer(table, v)
-    v
   }
 
   /** Commit externally-staged parquet files as a FRESH snapshot — the
@@ -930,57 +822,21 @@ class TableStore(spark: SparkSession, val warehouse: String) {
       partitionBy: Seq[String] = Seq.empty,
       constraints: Seq[(String, String)] = Seq.empty,
       writeOrder: Seq[String] = Seq.empty): Long = {
-    val v = latestCommittedVersion(table) + 1
-    val dataDir = versionDir(table, v)
-    val f = fs(dataDir)
-    f.mkdirs(dataDir)
-    val kinds: Map[String, Option[String]] =
-      (try statKindsOf(org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-      catch { case _: Throwable => Map.empty[String, Option[String]] }) ++
-      partitionBy.flatMap { (c: String) => c match {
-        case TableStore.DaysRe(_) | TableStore.MonthsRe(_) |
-             TableStore.HoursRe(_) | TableStore.YearsRe(_) |
-             TableStore.TruncRe(_, _) =>
-          Some(c -> Some("string"))
-        case TableStore.BucketRe(_, _) => Some(c -> Some("long"))
-        case _ => None
-      }}.toMap
+    val v = head(table).version
     // inline DDL constraints commit ATOMICALLY with the data: the staged
     // rows are validated BEFORE the rename loop (one bounded read of the
     // STAGING paths), so no snapshot ever pairs the constraint with
     // violating rows — and a violating CTAS/RTAS aborts while its files
     // are still under staging, leaving nothing inside the v=N directory
-    // that the next commit (same latestCommittedVersion+1) will reuse
-    if (constraints.nonEmpty && staged.nonEmpty) {
-      import org.apache.spark.sql.functions.{expr, raise_error, when}
-      import org.apache.spark.sql.functions.{lit => flit}
-      val df = spark.read.parquet(staged.map(_._1.toString): _*)
-      constraints.foldLeft(df) { case (d, (nm, pred)) =>
-        d.filter(when(expr(pred) <=> flit(false),
-          raise_error(flit(s"CTAS rows violate CHECK $nm ($pred)"))
-            .cast("boolean")).otherwise(flit(true)))
-      }.count()
-    }
-    val newEntries = harvestInParallel(staged) { case (p, rel) =>
-      val dest = new Path(dataDir, rel)
-      f.mkdirs(dest.getParent)
-      require(f.rename(p, dest), s"failed to move staged file $p")
-      val (rows, stats) = footerStats(dest)
-      val pvals = partitionValuesOf(rel)
-      val pstats = pvals.flatMap {
-        case (c, pv) if pv != "__HIVE_DEFAULT_PARTITION__" =>
-          kinds.get(c).flatten.map(k => c -> ColStats(pv, pv, k, 0L))
-        case _ => None
-      }
-      FileEntry(s"v=$v/$rel", f.getFileStatus(dest).getLen, rows,
-        stats ++ pstats, pvals)
-    }
-    writeManifest(table, Manifest(v, System.currentTimeMillis(), operation,
-      newEntries.map(_.rowCount).sum, newEntries, schemaJson, partitionBy,
-      constraints = constraints, writeOrder = writeOrder))
-    swapPointer(table, v)
-    v
+    // that the next commit will reuse
+    if (constraints.nonEmpty && staged.nonEmpty)
+      checked(spark.read.parquet(staged.map(_._1.toString): _*), constraints,
+        (nm, pred) => s"CTAS rows violate CHECK $nm ($pred)").count()
+    val schema = scala.util.Try(schemaOf(schemaJson)).getOrElse(new StructType())
+    val files = moveStaged(table, v + 1, staged, statKinds(schema, partitionBy), Map.empty)
+    publish(table, Manifest.emptyAt(v).next(operation).copy(files = files,
+      schemaJson = schemaJson, partitionBy = partitionBy, constraints = constraints,
+      writeOrder = writeOrder))
   }
 
   /** The identity-allocation basis for `col`: the extreme committed value
@@ -1438,34 +1294,22 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     * caller's read and this attempt's manifest read produces no CAS
     * conflict at all (the r6 refresh-race advisory). */
   private[graft] def appendOnce(table: String, df: DataFrame,
-      operation: String, requireBase: Long = -1L): Long =
-    if (!exists(table)) {
-      if (requireBase >= 0L)
-        throw new TableStore.CommitConflictException(
-          s"$table: expected base version $requireBase but table is absent")
-      commit(table, df, operation)
-    } else {
-      val m = manifests(table).maxBy(_.version)
-      if (requireBase >= 0L && m.version != requireBase)
-        throw new TableStore.CommitConflictException(
-          s"$table: expected base version $requireBase, found ${m.version}")
-      val existing = org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
+      operation: String, requireBase: Long = -1L): Long = {
+    val m = head(table, requireBase)
+    if (m.version == 0L) commit(table, df, operation, baseVersion = 0L)
+    else {
+      val existing = schemaOf(m.schemaJson)
       val extra = df.schema.fields.filterNot(f => existing.fieldNames.contains(f.name))
-      val merged = org.apache.spark.sql.types.StructType(existing.fields ++ extra)
-      val aligned = df.select(merged.fields.toSeq.map { f =>
-        if (df.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      }: _*)
       // Appends inherit the table's partition spec (Iceberg semantics):
       // the batch splits into per-partition files with exact min=max
       // partition stats, instead of one file spanning every partition the
       // batch touches — which no range predicate could ever prune.
       // baseVersion pins the carried file list to the snapshot it was
       // read from; a racing commit trips the CAS and the append retries.
-      commitFiles(table, m.files, Some(aligned), operation, m.partitionBy,
-        Seq.empty, baseVersion = m.version)
+      commitFiles(table, m.files, Some(alignTo(df, StructType(existing.fields ++ extra))),
+        operation, m.partitionBy, Seq.empty, baseVersion = m.version)
     }
+  }
 
   /** Adopt existing parquet files as the next snapshot WITHOUT copying or
     * rewriting a byte — Iceberg's `add_files`/`migrate` path, and the only
@@ -1488,7 +1332,8 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     * (name-resolved, missing columns null — same rule as schema
     * evolution). */
   def addFiles(table: String, source: String): Long = {
-    require(columnMapCarry(table).isEmpty,
+    val base = head(table)
+    require(base.columnMap.isEmpty,
       s"add_files: $table has renamed columns (pinned physical names); " +
         "adopted foreign files cannot be name-mapped — clone or rewrite instead")
     val src = new Path(source)
@@ -1508,30 +1353,18 @@ class TableStore(spark: SparkSession, val warehouse: String) {
         buf.toSeq.sortBy(_.getPath.toString)
       }
     require(statuses.nonEmpty, s"add_files: no parquet files under $source")
-    val entries = harvestInParallel(statuses) { s =>
-      val (rows, stats) = footerStats(s.getPath)
-      FileEntry(f.makeQualified(s.getPath).toString, s.getLen, rows, stats)
-    }
-    val kept = manifests(table).lastOption.map(_.files).getOrElse(Seq.empty)
-    val schemaJson = manifests(table).lastOption.map(_.schemaJson).getOrElse(
-      spark.read.parquet(statuses.map(_.getPath.toString): _*).schema.json)
-    val spec = manifests(table).lastOption.map(_.partitionBy).getOrElse(Seq.empty)
-    // pinned to the carried snapshot (CAS on rivals)
-    val v = manifests(table).lastOption.map(_.version).getOrElse(0L) + 1
+    val entries = harvestInParallel(statuses)(s => fileEntry(s.getPath,
+      f.makeQualified(s.getPath).toString, "", s.getLen, Map.empty, Map.empty))
+    val schemaJson =
+      if (base.version > 0L) base.schemaJson
+      else spark.read.parquet(statuses.map(_.getPath.toString): _*).schema.json
     // adopted files are validated like staged ones when constraints exist
-    if (constraintsCarry(table).nonEmpty) {
-      val schema = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      enforceConstraints(table, spark.read.schema(schema)
-        .parquet(statuses.map(_.getPath.toString): _*)).count()
-    }
-    writeManifest(table, Manifest(v, System.currentTimeMillis(), "add_files",
-      (kept ++ entries).map(_.rowCount).sum, kept ++ entries, schemaJson, spec,
-      droppedColumnsCarry(table, kept), deleteFilesCarry(table, kept),
-      constraints = constraintsCarry(table),
-      writeOrder = writeOrderCarry(table)))
-    swapPointer(table, v)
-    v
+    if (base.constraints.nonEmpty)
+      checked(spark.read.schema(schemaOf(schemaJson))
+        .parquet(statuses.map(_.getPath.toString): _*), base.constraints).count()
+    // the successor of the carried snapshot (CAS on rivals)
+    publish(table, successor(base, "add_files", base.files, entries)
+      .copy(schemaJson = schemaJson))
   }
 
   /** Read the latest snapshot. */
@@ -1566,8 +1399,7 @@ class TableStore(spark: SparkSession, val warehouse: String) {
       col(cmap.getOrElse(f.name, f.name)).as(f.name)): _*)
 
   private def readManifest(table: String, m: Manifest): DataFrame = {
-    val schema = org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val schema = schemaOf(m.schemaJson)
     val cmap = m.columnMap.toMap
     val pSchema = physSchemaOf(schema, cmap)
     val plain =
@@ -1660,8 +1492,7 @@ class TableStore(spark: SparkSession, val warehouse: String) {
       s"table $table has no version $toVersion")
     val added = addedFilesBetween(table, fromVersion, toVersion, skipRewrites)
     val toManifest = ms.find(_.version == toVersion).get
-    val schema = org.apache.spark.sql.types.DataType.fromJson(toManifest.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val schema = schemaOf(toManifest.schemaJson)
     val cmap = toManifest.columnMap.toMap
     if (added.isEmpty)
       spark.createDataFrame(new java.util.ArrayList[Row](), schema)
@@ -1768,7 +1599,9 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     val want = math.max(1, math.ceil(
       hit.map(_.sizeBytes).sum.toDouble / targetFileBytes).toInt)
     val packed = if (want <= hit.size) df.coalesce(want) else df.repartition(want)
-    commitFiles(table, kept, Some(packed), "compact")
+    // pinned: a rival committing mid-rewrite conflicts instead of having
+    // its files dropped by a file list decided against `m`
+    commitFiles(table, kept, Some(packed), "compact", baseVersion = m.version)
   }
 
   /** Sort-clustered rewrite (Iceberg's `rewrite_data_files` with a sort
@@ -1895,9 +1728,7 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     val m = manifests(table).maxBy(_.version)
     require(m.files.forall(_.path.startsWith("v=")),
       s"deleteWhereMoR needs table-relative data files; compact $table first")
-    val schema = org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val v = m.version + 1 // pinned to the carried snapshot (CAS on rivals)
+    val schema = schemaOf(m.schemaJson)
     val root = tableDir(table)
     val qualBase = fs(root).makeQualified(root).toString.stripSuffix("/")
     val cmapD = m.columnMap.toMap
@@ -1916,22 +1747,29 @@ class TableStore(spark: SparkSession, val warehouse: String) {
           s"substring(_metadata.file_path, ${qualBase.length + 2})")
           .as("__file"),
         col("_metadata.row_index").as("__pos"))
-    val dwid = java.util.UUID.randomUUID().toString.take(8)
-    val delDir = new Path(versionDir(table, v), s"deletes-$dwid")
-    hits.write.mode("overwrite").parquet(delDir.toString)
-    val f = fs(delDir)
-    val delEntries = listPartFiles(delDir, f).map { s =>
-      val (rows, _) = footerStats(s.getPath)
-      DeleteEntry(s"v=$v/deletes-$dwid/${s.getPath.getName}",
-        TableStore.PosDeleteKey, v, rows)
-    }
-    writeManifest(table, Manifest(v, System.currentTimeMillis(),
-      "delete_where_mor", m.files.map(_.rowCount).sum, m.files, m.schemaJson,
-      m.partitionBy, m.droppedColumns, m.deleteFiles ++ delEntries, None,
-      m.constraints, m.writeOrder, m.columnMap))
-    swapPointer(table, v)
-    v
+    // the successor of the carried snapshot (CAS on rivals)
+    val dels = writeDeletes(table, m.version + 1, hits, TableStore.PosDeleteKey)
+    publish(table, m.next("delete_where_mor").copy(deleteFiles = m.deleteFiles ++ dels))
   }
+
+  /** Write `rows` as delete files of version `v`, in their own
+    * writer-unique `deletes-` subdir (never confused with the version's
+    * data files; racing commits never share an output dir), and return
+    * their entries at sequence `v`. */
+  private def writeDeletes(table: String, v: Long, rows: DataFrame,
+      keyCols: Seq[String]): Seq[DeleteEntry] = {
+    val rel = s"v=$v/deletes-${java.util.UUID.randomUUID().toString.take(8)}"
+    val dir = new Path(tableDir(table), rel)
+    rows.write.mode("overwrite").parquet(dir.toString)
+    deleteEntries(dir, s"$rel/", keyCols, v)
+  }
+
+  /** Entries for the delete files under `dir`, recorded as
+    * `<prefix><file name>` with their footer row counts. */
+  private def deleteEntries(dir: Path, prefix: String, keyCols: Seq[String],
+      seq: Long): Seq[DeleteEntry] =
+    listPartFiles(dir, fs(dir)).map(s =>
+      DeleteEntry(prefix + s.getPath.getName, keyCols, seq, footerStats(s.getPath)._1))
 
   /** One-commit CDC apply (merge-on-read): `cdc` carries upsert rows and
     * delete markers (`deleteCol` = true drops the key). New images land as
@@ -1975,8 +1813,7 @@ class TableStore(spark: SparkSession, val warehouse: String) {
         .forall(_.keyCols == keyCols),
       s"$operation: existing delete files use keys " +
         s"${m.deleteFiles.map(_.keyCols).distinct}; compact $table first")
-    val existing = org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val existing = schemaOf(m.schemaJson)
     keyCols.foreach(k => require(existing.fieldNames.contains(k),
       s"$operation: key column $k not in table schema"))
     // pinned to the manifest this delta carries: a rival landing after
@@ -1985,21 +1822,11 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     val dataEntries = dataRows match {
       case None => Seq.empty
       case Some(source) =>
-        val aligned = source.select(existing.fields.toSeq.map { f =>
-          if (source.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-          else functions.lit(null).cast(f.dataType).as(f.name)
-        }: _*)
-        val wid = java.util.UUID.randomUUID().toString.take(8)
-        writeDataFiles(new Path(versionDir(table, v), s"w-$wid"),
-          s"v=$v/w-$wid",
-          applyWriteOrder(table, enforceConstraints(table, aligned),
+        val rel = s"v=$v/w-${java.util.UUID.randomUUID().toString.take(8)}"
+        writeDataFiles(new Path(tableDir(table), rel), rel,
+          applyWriteOrder(m.writeOrder, checked(alignTo(source, existing), m.constraints),
             m.partitionBy), m.partitionBy, Seq.empty, m.columnMap.toMap)
     }
-    // Distinct delete keys land under v=N/deletes-<writer>/ (their own
-    // subdir so they can never be confused with the version's data files;
-    // writer-unique so racing MoR commits never share an output dir).
-    val dwid = java.util.UUID.randomUUID().toString.take(8)
-    val delDir = new Path(versionDir(table, v), s"deletes-$dwid")
     // An upsert's delete keys are BY DEFINITION the keys of the rows just
     // written (upsertMoR passes the same frame as data and key source) —
     // so read them back from the freshly written data files instead of
@@ -2038,21 +1865,10 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     // or pinned) tripled the sf10 p=0.99 cdc cell mid-grid (13 s → 36 s
     // / 55 s measured). A key dump is a narrow column-pruned scan +
     // write: zero shuffle, zero aggregation state, at any batch size.
-    keySrc.select(keyTypes.map(f => col(f.name).cast(f.dataType)
-        .as(cmapW.getOrElse(f.name, f.name))): _*)
-      .write.mode("overwrite").parquet(delDir.toString)
-    val f = fs(delDir)
-    val delEntries = listPartFiles(delDir, f).map { s =>
-      val (rows, _) = footerStats(s.getPath)
-      DeleteEntry(s"v=$v/deletes-$dwid/${s.getPath.getName}", keyCols, v, rows)
-    }
-    writeManifest(table, Manifest(v, System.currentTimeMillis(), operation,
-      (m.files ++ dataEntries).map(_.rowCount).sum, m.files ++ dataEntries,
-      m.schemaJson, m.partitionBy, m.droppedColumns,
-      m.deleteFiles ++ delEntries, streamEpoch, m.constraints,
-      m.writeOrder, m.columnMap))
-    swapPointer(table, v)
-    v
+    val dels = writeDeletes(table, v, keySrc.select(keyTypes.map(f =>
+      col(f.name).cast(f.dataType).as(cmapW.getOrElse(f.name, f.name))): _*), keyCols)
+    publish(table, m.next(operation).copy(files = m.files ++ dataEntries,
+      deleteFiles = m.deleteFiles ++ dels, streamEpoch = streamEpoch))
   }
 
   /** Delete-file compaction (Iceberg's `rewrite_delete_files`): rewrite
@@ -2083,8 +1899,7 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     val (posCarry, eqDelsAll) = m.deleteFiles.partition(TableStore.isPositional)
     if (eqDelsAll.isEmpty) return m.version
     val keyCols = eqDelsAll.head.keyCols
-    val schema = org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val schema = schemaOf(m.schemaJson)
     // delete files store PHYSICAL key names; rewrite them the same way
     val cmapC = m.columnMap.toMap
     val physKeyCols = keyCols.map(k => cmapC.getOrElse(k, k))
@@ -2108,9 +1923,9 @@ class TableStore(spark: SparkSession, val warehouse: String) {
         .otherwise(acc)
     }
     val keyed = maxed.withColumn("__c", canon).filter(col("__c").isNotNull)
-    val v = m.version + 1 // pinned to the carried snapshot (CAS on rivals)
-    val dwid = java.util.UUID.randomUUID().toString.take(8)
-    val delDir = new Path(versionDir(table, v), s"deletes-$dwid")
+    // the successor of the carried snapshot (CAS on rivals)
+    val rel = s"v=${m.version + 1}/deletes-${java.util.UUID.randomUUID().toString.take(8)}"
+    val delDir = new Path(root, rel)
     // distinct surviving classes: ≤ #data commits — bounded metadata
     val classes = keyed.select(col("__c")).distinct().collect()
       .map(_.getLong(0)).sorted
@@ -2119,20 +1934,9 @@ class TableStore(spark: SparkSession, val warehouse: String) {
       keyed.repartition(classes.length, col("__c"))
         .select(physKeyCols.map(col) :+ col("__c"): _*)
         .write.partitionBy("__c").mode("overwrite").parquet(delDir.toString)
-    val f = fs(delDir)
-    val delEntries = classes.flatMap { c =>
-      listPartFiles(new Path(delDir, s"__c=$c"), f).map { st =>
-        val (rows, _) = footerStats(st.getPath)
-        DeleteEntry(s"v=$v/deletes-$dwid/__c=$c/${st.getPath.getName}",
-          keyCols, c, rows)
-      }
-    }.toSeq
-    writeManifest(table, Manifest(v, System.currentTimeMillis(),
-      "compact_deletes", m.files.map(_.rowCount).sum, m.files, m.schemaJson,
-      m.partitionBy, m.droppedColumns, delEntries ++ posCarry, None,
-      m.constraints, m.writeOrder, m.columnMap))
-    swapPointer(table, v)
-    v
+    val dels = classes.toSeq.flatMap(c =>
+      deleteEntries(new Path(delDir, s"__c=$c"), s"$rel/__c=$c/", keyCols, c))
+    publish(table, m.next("compact_deletes").copy(deleteFiles = dels ++ posCarry))
   }
 
   /** Positional-delete consolidation (Iceberg v3's move to delete
@@ -2157,22 +1961,9 @@ class TableStore(spark: SparkSession, val warehouse: String) {
       .select(col("__file"), col("__pos")).distinct()
       .repartitionByRange(col("__file"), col("__pos"))
       .sortWithinPartitions(col("__file"), col("__pos"))
-    val v = m.version + 1 // pinned to the carried snapshot (CAS on rivals)
-    val dwid = java.util.UUID.randomUUID().toString.take(8)
-    val delDir = new Path(versionDir(table, v), s"deletes-$dwid")
-    merged.write.mode("overwrite").parquet(delDir.toString)
-    val f = fs(delDir)
-    val delEntries = listPartFiles(delDir, f).map { s =>
-      val (rows, _) = footerStats(s.getPath)
-      DeleteEntry(s"v=$v/deletes-$dwid/${s.getPath.getName}",
-        TableStore.PosDeleteKey, v, rows)
-    }
-    writeManifest(table, Manifest(v, System.currentTimeMillis(),
-      "rewrite_position_deletes", m.files.map(_.rowCount).sum, m.files,
-      m.schemaJson, m.partitionBy, m.droppedColumns, eqCarry ++ delEntries,
-      None, m.constraints, m.writeOrder, m.columnMap))
-    swapPointer(table, v)
-    v
+    // the successor of the carried snapshot (CAS on rivals)
+    val dels = writeDeletes(table, m.version + 1, merged, TableStore.PosDeleteKey)
+    publish(table, m.next("rewrite_position_deletes").copy(deleteFiles = eqCarry ++ dels))
   }
 
   /** Row-level change feed between snapshots (Iceberg's changelog scan /
@@ -2210,14 +2001,7 @@ class TableStore(spark: SparkSession, val warehouse: String) {
       if (fromVersion == 0 && inRange.nonEmpty)
         inRange.head.copy(files = Seq.empty) +: inRange
       else inRange
-    val outSchema = org.apache.spark.sql.types.DataType
-      .fromJson(chain.last.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    def align(df: DataFrame): DataFrame =
-      df.select(outSchema.fields.toSeq.map { f =>
-        if (df.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-        else functions.lit(null).cast(f.dataType).as(f.name)
-      }: _*)
+    val outSchema = schemaOf(chain.last.schemaJson)
     val steps = chain.zip(chain.drop(1)).flatMap { case (a, b) =>
       val aPaths = a.files.map(_.path).toSet
       val bPaths = b.files.map(_.path).toSet
@@ -2227,10 +2011,10 @@ class TableStore(spark: SparkSession, val warehouse: String) {
       else {
         val addedRows =
           if (added.isEmpty) None
-          else Some(align(readManifest(table, b.copy(files = added))))
+          else Some(alignTo(readManifest(table, b.copy(files = added)), outSchema))
         val removedRows =
           if (removed.isEmpty) None
-          else Some(align(readManifest(table, a.copy(files = removed))))
+          else Some(alignTo(readManifest(table, a.copy(files = removed)), outSchema))
         val (ins, del) = (addedRows, removedRows) match {
           case (Some(ar), Some(rr)) => (Some(ar.exceptAll(rr)), Some(rr.exceptAll(ar)))
           case other => other
@@ -2425,11 +2209,8 @@ class TableStore(spark: SparkSession, val warehouse: String) {
       case (Some((pv, pRows, pCols)), Some(bm)) if pv <= m.version =>
         val basePaths = bm.files.map(_.path).toSet
         val curPaths = m.files.map(_.path).toSet
-        val requested = if (columns.isEmpty)
-          org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
-            .asInstanceOf[org.apache.spark.sql.types.StructType]
-            .fieldNames.toSeq
-          else columns
+        val requested =
+          if (columns.isEmpty) schemaOf(m.schemaJson).fieldNames.toSeq else columns
         val mergeable =
           basePaths.subsetOf(curPaths) &&
           m.deleteFiles.map(d => (d.path, d.seq)).toSet ==
@@ -2565,24 +2346,17 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     require(m.deleteFiles.isEmpty,
       s"stageAppend: $table has merge-on-read delete files; staged paths " +
         "carry no version sequence, so compact the table first")
-    val existing = org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val aligned = df.select(existing.fields.toSeq.map { f =>
-      if (df.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    }: _*)
     val id = java.util.UUID.randomUUID().toString.take(8)
-    val entries = writeDataFiles(new Path(tableDir(table), s"stage-$id"),
-      s"stage-$id", aligned, m.partitionBy, Seq.empty, m.columnMap.toMap)
+    val entries = writeDataFiles(new Path(tableDir(table), s"stage-$id"), s"stage-$id",
+      alignTo(df, schemaOf(m.schemaJson)), m.partitionBy, Seq.empty, m.columnMap.toMap)
     // The staged manifest reuses the snapshot JSON shape (version 0 =
     // "not a version") and records ONLY the new entries: publish composes
     // them with whatever the table's files are AT PUBLISH time, so an
     // append-shaped stage stays publishable even if main advanced
     // (Iceberg fast-append cherry-pick semantics).
     writeManifestAt(stagedPath(table, id), Manifest(0L,
-      System.currentTimeMillis(), "wap_stage",
-      entries.map(_.rowCount).sum, entries, m.schemaJson, m.partitionBy,
-      Seq.empty, columnMap = m.columnMap))
+      System.currentTimeMillis(), "wap_stage", entries, m.schemaJson, m.partitionBy,
+      columnMap = m.columnMap))
     id
   }
 
@@ -2620,7 +2394,8 @@ class TableStore(spark: SparkSession, val warehouse: String) {
         s"table $table gained merge-on-read delete files since stage " +
           s"$stageId; staged paths carry no version sequence — compact, " +
           "then publish")
-      val v = commitFiles(table, m.files ++ st.files, None, "wap_publish")
+      val v = commitFiles(table, m.files ++ st.files, None, "wap_publish",
+        baseVersion = m.version)
       fs(stagedPath(table, stageId)).delete(stagedPath(table, stageId), false)
       v
     }
@@ -2655,8 +2430,8 @@ class TableStore(spark: SparkSession, val warehouse: String) {
   /** Begin an all-or-nothing MULTI-TABLE transaction — the classic
     * single-table-format gap (an Iceberg/Delta commit is atomic per
     * table; cross-table atomicity needs a transactional catalog à la
-    * Nessie). Protocol (write-ahead-intent, single concurrent writer per
-    * table as documented at the top of this class):
+    * Nessie). Protocol (write-ahead intent; each apply is an ordinary
+    * optimistic commit):
     *
     *  1. STAGE: each op writes its data files + a side manifest under
     *     the table's `_txnstaged/` — no version slot consumed, readers
@@ -2702,14 +2477,8 @@ class TableStore(spark: SparkSession, val warehouse: String) {
       require(m.deleteFiles.isEmpty,
         s"txn stageAppend: $table has merge-on-read delete files; staged " +
           "paths carry no version sequence, so compact the table first")
-      val existing = org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      val aligned = df.select(existing.fields.toSeq.map { f =>
-        if (df.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      }: _*)
-      stage(table, enforceConstraints(table, aligned), "append",
-        m.schemaJson, m.partitionBy)
+      stage(table, checked(alignTo(df, schemaOf(m.schemaJson)), m.constraints),
+        "append", m.schemaJson, m.partitionBy)
     }
 
     /** Stage a full-snapshot replace (CTAS if the table does not exist,
@@ -2718,20 +2487,20 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     def stageOverwrite(table: String, df: DataFrame,
         partitionBy: Seq[String] = Seq.empty): this.type = {
       require(!closed, "transaction already committed or aborted")
-      stage(table, enforceConstraints(table, df), "overwrite",
+      stage(table, checked(df, checkConstraints(table)), "overwrite",
         df.schema.json, partitionBy)
     }
 
     private def stage(table: String, df: DataFrame, shape: String,
         schemaJson: String, partitionBy: Seq[String]): this.type = {
       val k = ops.size
+      val m = head(table)
       val entries = writeDataFiles(new Path(tableDir(table), s"txn-$id-$k"),
-        s"txn-$id-$k", applyWriteOrder(table, df, partitionBy),
-        partitionBy, Seq.empty, columnMapCarry(table).toMap)
+        s"txn-$id-$k", applyWriteOrder(m.writeOrder, df, partitionBy),
+        partitionBy, Seq.empty, m.columnMap.toMap)
       writeManifestAt(txnStagedPath(table, id, k),
-        Manifest(0L, System.currentTimeMillis(), s"txn_$shape",
-          entries.map(_.rowCount).sum, entries, schemaJson, partitionBy,
-          Seq.empty))
+        Manifest(0L, System.currentTimeMillis(), s"txn_$shape", entries,
+          schemaJson, partitionBy))
       ops += Op(k, table, shape)
       this
     }
@@ -2755,26 +2524,19 @@ class TableStore(spark: SparkSession, val warehouse: String) {
           .forall(_.keyCols == keyCols),
         s"txn stageDeleteKeys: existing delete files on $table use keys " +
           s"${m.deleteFiles.map(_.keyCols).distinct}; compact first")
-      val existing = org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
+      val existing = schemaOf(m.schemaJson)
       keyCols.foreach(kc => require(existing.fieldNames.contains(kc),
         s"txn stageDeleteKeys: key column $kc not in $table's schema"))
       val k = ops.size
-      val aligned = keys.select(keyCols.map(c =>
-        col(c).cast(existing(existing.fieldIndex(c)).dataType).as(c)): _*)
-        .distinct()
       val dir = new Path(tableDir(table), s"txn-$id-$k")
-      aligned.write.mode("overwrite").parquet(dir.toString)
-      val f = fs(dir)
+      keys.select(keyCols.map(c =>
+        col(c).cast(existing(existing.fieldIndex(c)).dataType).as(c)): _*)
+        .distinct().write.mode("overwrite").parquet(dir.toString)
       // entries carry bare file names + seq 0; apply re-paths them under
       // the applied version and stamps its sequence
-      val entries = listPartFiles(dir, f).map { s =>
-        val (rows, _) = footerStats(s.getPath)
-        DeleteEntry(s.getPath.getName, keyCols, 0L, rows)
-      }
       writeManifestAt(txnStagedPath(table, id, k),
-        Manifest(0L, System.currentTimeMillis(), "txn_deletekeys", 0L,
-          Seq.empty, m.schemaJson, Seq.empty, Seq.empty, entries))
+        Manifest(0L, System.currentTimeMillis(), "txn_deletekeys", Seq.empty,
+          m.schemaJson, deleteFiles = deleteEntries(dir, "", keyCols, 0L)))
       ops += Op(k, table, "deletekeys")
       this
     }
@@ -2835,22 +2597,16 @@ class TableStore(spark: SparkSession, val warehouse: String) {
           val st = parseManifest(
             try scala.io.Source.fromInputStream(in).mkString finally in.close(),
             table)
-          val v = latestCommittedVersion(table) + 1
-          shape match {
+          val m = head(table)
+          val v = m.version + 1
+          out(table) = publish(table, shape match {
             case "append" =>
-              val m = manifests(table).maxBy(_.version)
               require(m.schemaJson == st.schemaJson,
                 s"txn $id: $table schema changed since staging")
               require(m.deleteFiles.isEmpty,
                 s"txn $id: $table gained merge-on-read deletes since staging")
-              val files = m.files ++ st.files
-              writeManifest(table, Manifest(v, System.currentTimeMillis(),
-                s"txn_append $marker", files.map(_.rowCount).sum, files,
-                m.schemaJson, m.partitionBy, m.droppedColumns, m.deleteFiles,
-                constraints = m.constraints, writeOrder = m.writeOrder,
-                columnMap = m.columnMap))
+              successor(m, s"txn_append $marker", m.files, st.files)
             case "deletekeys" =>
-              val m = manifests(table).maxBy(_.version)
               require(m.schemaJson == st.schemaJson,
                 s"txn $id: $table schema changed since staging")
               val keyCols = st.deleteFiles.headOption.map(_.keyCols)
@@ -2862,7 +2618,7 @@ class TableStore(spark: SparkSession, val warehouse: String) {
               // sequence assignment = one dir rename into the applied
               // version (metadata-only; deterministic target so a crash
               // between rename and manifest write re-applies cleanly —
-              // same v is recomputed under the single-writer contract)
+              // recovery recomputes the same v unless a rival committed)
               val src = new Path(tableDir(table), s"txn-$id-$k")
               val dst = new Path(versionDir(table, v), s"deletes-txn-$id-$k")
               val fr = fs(src)
@@ -2875,21 +2631,11 @@ class TableStore(spark: SparkSession, val warehouse: String) {
               val rel = s"v=$v/deletes-txn-$id-$k"
               val dels = st.deleteFiles.map(e =>
                 e.copy(path = s"$rel/${e.path}", seq = v))
-              writeManifest(table, Manifest(v, System.currentTimeMillis(),
-                s"txn_deletekeys $marker", m.files.map(_.rowCount).sum,
-                m.files, m.schemaJson, m.partitionBy, m.droppedColumns,
-                m.deleteFiles ++ dels, None, m.constraints, m.writeOrder,
-                m.columnMap))
+              m.next(s"txn_deletekeys $marker").copy(deleteFiles = m.deleteFiles ++ dels)
             case _ =>
-              writeManifest(table, Manifest(v, System.currentTimeMillis(),
-                s"txn_overwrite $marker", st.rowCount, st.files,
-                st.schemaJson, st.partitionBy,
-                constraints = constraintsCarry(table),
-                writeOrder = writeOrderCarry(table),
-                columnMap = columnMapCarry(table)))
-          }
-          swapPointer(table, v)
-          out(table) = v
+              successor(m, s"txn_overwrite $marker", Seq.empty, st.files)
+                .copy(schemaJson = st.schemaJson, partitionBy = st.partitionBy)
+          })
       }
       val f2 = fs(sp)
       if (f2.exists(sp)) { f2.delete(sp, false); () }
@@ -2973,11 +2719,8 @@ class TableStore(spark: SparkSession, val warehouse: String) {
       else fe.copy(path =
         f.makeQualified(new Path(srcDir, fe.path)).toString)
     }
-    writeManifest(target, Manifest(1L, System.currentTimeMillis(), "clone",
-      m.rowCount, files, m.schemaJson, m.partitionBy, m.droppedColumns,
-      Seq.empty, None, m.constraints, m.writeOrder, m.columnMap))
-    swapPointer(target, 1L)
-    1L
+    // the source snapshot, re-based as the target's (empty) version 0
+    publish(target, m.copy(version = 0L).next("clone").copy(files = files))
   }
 
   // ---------------------------------------------------------- branches
@@ -3052,31 +2795,14 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     * Fork-time CHECK constraints are enforced per row like main writes. */
   def appendToBranch(table: String, name: String, df: DataFrame): Long = {
     val ms = branchManifests(table, name)
-    val head = ms.maxBy(_.version)
-    val k = head.version + 1
-    val schema = org.apache.spark.sql.types.DataType.fromJson(head.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val aligned = df.select(schema.fields.toSeq.map { f =>
-      if (df.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-      else functions.lit(null).cast(f.dataType).as(f.name)
-    }: _*)
-    val checked = head.constraints.foldLeft(aligned) { case (d, (nm, pred)) =>
-      import org.apache.spark.sql.functions.{expr, raise_error, when}
-      import org.apache.spark.sql.functions.{lit => flit}
-      d.filter(when(expr(pred) <=> flit(false),
-        raise_error(flit(s"CHECK constraint $nm violated: $pred"))
-          .cast("boolean")).otherwise(flit(true)))
-    }
-    val bwid = java.util.UUID.randomUUID().toString.take(8)
-    val entries = writeDataFiles(
-      new Path(tableDir(table), s"branch-$name/v=$k/w-$bwid"),
-      s"branch-$name/v=$k/w-$bwid", checked, head.partitionBy, Seq.empty,
-      head.columnMap.toMap)
+    val tip = ms.maxBy(_.version)
+    val k = tip.version + 1
+    val rel = s"branch-$name/v=$k/w-${java.util.UUID.randomUUID().toString.take(8)}"
+    val entries = writeDataFiles(new Path(tableDir(table), rel), rel,
+      checked(alignTo(df, schemaOf(tip.schemaJson)), tip.constraints),
+      tip.partitionBy, Seq.empty, tip.columnMap.toMap)
     writeManifestAt(branchManifestPath(table, name, k),
-      Manifest(k, System.currentTimeMillis(), "append",
-        (head.files ++ entries).map(_.rowCount).sum, head.files ++ entries,
-        head.schemaJson, head.partitionBy, head.droppedColumns, Seq.empty,
-        None, head.constraints, head.writeOrder, head.columnMap))
+      tip.next("append").copy(files = tip.files ++ entries))
     k
   }
 
@@ -3094,11 +2820,12 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     require(cur == base,
       s"main advanced past fork base $base (now $cur); branch $name is " +
         "not fast-forwardable — re-create it from the current snapshot")
-    ms.filter(_.version > 0L).sortBy(_.version).foreach { bm =>
-      commitFiles(table, bm.files, None, "branch_ff")
+    // each published commit is pinned to its predecessor
+    val v = ms.filter(_.version > 0L).sortBy(_.version).foldLeft(base) { (b, bm) =>
+      commitFiles(table, bm.files, None, "branch_ff", baseVersion = b)
     }
     fs(branchDir(table, name)).delete(branchDir(table, name), true)
-    currentVersion(table)
+    v
   }
 
   /** Drop a branch: its manifests AND its own data files (never the
@@ -3143,8 +2870,8 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     * still referenced by a surviving snapshot are NOT deleted — after
     * copy-on-write commits a snapshot may share files with older ones.
     * Tagged versions ([[createTag]]) are always retained, as in Iceberg:
-    * a release tag must stay readable no matter the retention policy. */
-  /** `olderThanMs`: additionally retain every snapshot committed at or
+    * a release tag must stay readable no matter the retention policy.
+    * `olderThanMs`: additionally retain every snapshot committed at or
     * after this timestamp (Iceberg's `older_than` retention axis — time
     * AND count compose; the newest `keepLast` survive regardless). */
   def expireSnapshots(table: String, keepLast: Int = 1,
@@ -3341,7 +3068,7 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     if (cmn != null) cmn.forEach(e =>
       cmap += ((e.get("l").asText(), e.get("p").asText())))
     Manifest(n.get("version").asLong(), n.get("timestampMs").asLong(),
-      n.get("operation").asText(), n.get("rowCount").asLong(), files.toSeq,
+      n.get("operation").asText(), files.toSeq,
       n.get("schemaJson").asText(), spec.toSeq, dropped.toSeq, dels.toSeq,
       epoch, cons.toSeq, worder.toSeq, cmap.toSeq)
   }
@@ -3507,30 +3234,17 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     * newer committed version (the newer writer's swap covers ours). */
   private def swapPointer(table: String, v: Long): Unit = {
     val p = currentPtr(table)
-    val f = fs(p)
+    // A torn/checksum-raced read of the cache: the manifest listing is
+    // authoritative but ALREADY contains our own version v, so skip the
+    // swap only when a strictly newer manifest exists (that writer's swap
+    // covers ours); otherwise we are the newest commit and must still
+    // advance the pointer.
     val cur =
-      if (!f.exists(p)) 0L
-      else
-        try {
-          val in = f.open(p)
-          try scala.io.Source.fromInputStream(in).mkString.trim.toLong
-          finally in.close()
-        } catch {
-          // Torn/checksum-raced read of the cache. The manifest listing is
-          // authoritative but ALREADY contains our own version v, so: skip
-          // the swap only when a strictly newer manifest exists (that
-          // writer's swap covers ours); otherwise we are the newest commit
-          // and must still advance the pointer.
-          case _: java.io.IOException | _: NumberFormatException =>
-            val dir = new Path(tableDir(table), "_manifests")
-            val mx =
-              if (!f.exists(dir)) 0L
-              else f.listStatus(dir).map(_.getPath.getName)
-                .collect { case n if n.endsWith(".json") =>
-                  n.stripSuffix(".json").toLong }
-                .foldLeft(0L)(math.max)
-            if (mx <= v) v - 1 else mx
-        }
+      if (!fs(p).exists(p)) 0L
+      else pointerVersion(table).getOrElse {
+        val mx = listedVersion(table)
+        if (mx <= v) v - 1 else mx
+      }
     if (v > cur) atomicWrite(p, v.toString)
   }
 
@@ -3686,10 +3400,6 @@ object TableStore {
     (java.lang.Long.parseLong(hex6, 16) % n).toInt
   }
 
-  /** A data file's sequence = the version encoded in its `v=N/` path
-    * prefix (files are written into their commit's version directory and
-    * never renamed). Non-version paths (staged files published in place)
-    * sequence as 0 — merge-on-read writes refuse such tables up front. */
   /** Sentinel key set marking a POSITIONAL delete file (Iceberg v2's
     * second delete kind): rows are `(__file, __pos)` — table-relative
     * data-file path and row index within it — instead of data-key
@@ -3707,6 +3417,10 @@ object TableStore {
   def isExternalPath(p: String): Boolean =
     p.startsWith("/") || p.contains(":/")
 
+  /** A data file's sequence = the version encoded in its `v=N/` path
+    * prefix (files are written into their commit's version directory and
+    * never renamed). Non-version paths (staged files published in place)
+    * sequence as 0 — merge-on-read writes refuse such tables up front. */
   def fileSeqOf(path: String): Long =
     if (path.startsWith("v=")) {
       val i = path.indexOf('/')
@@ -3814,11 +3528,7 @@ object TableStore {
   case class FileEntry(path: String, sizeBytes: Long, rowCount: Long = 0L,
     stats: Map[String, ColStats] = Map.empty,
     partitionValues: Map[String, String] = Map.empty)
-  /** `droppedColumns` accumulates every column name ever dropped from the
-    * table. Old data files still physically contain those columns; because
-    * reads resolve by NAME (no field ids), re-adding a dropped name would
-    * silently resurrect the stale values instead of reading null — so
-    * ADD COLUMN of a dropped name is rejected (see GraftCatalog.alterTable). */
+
   /** Equality-delete file (Iceberg v2 merge-on-read): `path` holds the
     * DISTINCT `keyCols` tuples invalidated at sequence `seq` — readers
     * drop matching rows from data files with a SMALLER sequence (a data
@@ -3828,23 +3538,48 @@ object TableStore {
   case class DeleteEntry(path: String, keyCols: Seq[String], seq: Long,
     rowCount: Long = 0L)
 
-  /** `streamEpoch` marks a snapshot committed by a Structured Streaming
+  /** One snapshot of a table.
+    *
+    * `droppedColumns` accumulates every column name ever dropped from the
+    * table. Old data files still physically contain those columns; because
+    * reads resolve by NAME (no field ids), re-adding a dropped name would
+    * silently resurrect the stale values instead of reading null — so
+    * ADD COLUMN of a dropped name is rejected (see GraftCatalog.alterTable).
+    *
+    * `streamEpoch` marks a snapshot committed by a Structured Streaming
     * sink epoch (streaming query id, epoch id). It is the exactly-once
     * ledger: a restarted stream that replays an epoch finds the marker and
     * skips the re-commit. Never carried forward — each manifest records
-    * only its own epoch. */
-  /** `constraints` are named CHECK predicates (SQL text) enforced on
+    * only its own epoch.
+    *
+    * `constraints` are named CHECK predicates (SQL text) enforced on
     * every row written to the table (Delta-style); carried forward by
     * every commit like the partition spec. A row violates a constraint
     * only when the predicate evaluates to FALSE — NULL passes, the SQL
     * standard CHECK semantic. */
   case class Manifest(version: Long, timestampMs: Long, operation: String,
-    rowCount: Long, files: Seq[FileEntry], schemaJson: String,
-    partitionBy: Seq[String] = Seq.empty,
-    droppedColumns: Seq[String] = Seq.empty,
-    deleteFiles: Seq[DeleteEntry] = Seq.empty,
-    streamEpoch: Option[(String, Long)] = None,
-    constraints: Seq[(String, String)] = Seq.empty,
-    writeOrder: Seq[String] = Seq.empty,
-    columnMap: Seq[(String, String)] = Seq.empty)
+      files: Seq[FileEntry], schemaJson: String,
+      partitionBy: Seq[String] = Seq.empty,
+      droppedColumns: Seq[String] = Seq.empty,
+      deleteFiles: Seq[DeleteEntry] = Seq.empty,
+      streamEpoch: Option[(String, Long)] = None,
+      constraints: Seq[(String, String)] = Seq.empty,
+      writeOrder: Seq[String] = Seq.empty,
+      columnMap: Seq[(String, String)] = Seq.empty) {
+    /** Rows across `files` (persisted under the `rowCount` key). */
+    lazy val rowCount: Long = files.iterator.map(_.rowCount).sum
+
+    /** The successor snapshot: the next version, stamped now, made by
+      * `operation`, carrying every other field except the epoch stamp.
+      * Each commit overrides only what it changes. */
+    def next(operation: String): Manifest = copy(version = version + 1,
+      timestampMs = System.currentTimeMillis(), operation = operation,
+      streamEpoch = None)
+  }
+
+  object Manifest {
+    /** A table with no content at `version` — version 0 is the state
+      * before a table's first snapshot; a replace builds on the head's. */
+    def emptyAt(version: Long): Manifest = Manifest(version, 0L, "", Seq.empty, "{}")
+  }
 }

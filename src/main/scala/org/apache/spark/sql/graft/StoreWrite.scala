@@ -62,11 +62,14 @@ object StoreWrite {
   /** WriteBuilder for a group-based row-level operation (MERGE / UPDATE /
     * DELETE): the rewritten rows replace the files the operation's scan
     * covered; `kept` supplies the untouched files (file-level
-    * copy-on-write, resolved at commit time). */
+    * copy-on-write, resolved at commit time). The commit is pinned to
+    * `baseVersion`, the snapshot the scan planned on: a commit landing
+    * during the write job makes it conflict instead of being dropped. */
   def cowBuilder(warehouse: String, table: String, info: LogicalWriteInfo,
-      operation: String, kept: () => Seq[TableStore.FileEntry]): WriteBuilder =
+      operation: String, kept: () => Seq[TableStore.FileEntry],
+      baseVersion: Long): WriteBuilder =
     new GraftWriteBuilder(warehouse, table, info.schema(), operation, kept,
-      info.queryId())
+      info.queryId(), baseVersion)
 
   /** WriteBuilder for a STAGED `CREATE / REPLACE TABLE AS SELECT`
     * (StagingTableCatalog): rows stage under the table's `_staging` dir
@@ -97,7 +100,7 @@ object StoreWrite {
 
 private class GraftWriteBuilder(warehouse: String, table: String,
     schema: StructType, operation: String, kept: () => Seq[TableStore.FileEntry],
-    queryId: String)
+    queryId: String, baseVersion: Long = -1L)
     extends WriteBuilder with SupportsTruncate with SupportsDynamicOverwrite
     with SupportsOverwriteV2 {
   private var op = operation
@@ -127,7 +130,7 @@ private class GraftWriteBuilder(warehouse: String, table: String,
   }
   override def build(): Write =
     new GraftWrite(warehouse, table, schema, op, keptFiles, queryId,
-      overwriteMode)
+      overwriteMode, baseVersion = baseVersion)
 }
 
 /** How the commit resolves the files KEPT alongside the staged ones. */
@@ -154,7 +157,8 @@ private class GraftWrite(warehouse: String, table: String, schema: StructType,
     mode: OverwriteMode = KeepKept,
     explicitSpec: Option[Seq[String]] = None,
     explicitOrder: Option[Seq[String]] = None,
-    stagedSink: Option[Seq[(String, String)] => Unit] = None)
+    stagedSink: Option[Seq[(String, String)] => Unit] = None,
+    baseVersion: Long = -1L)
     extends Write with BatchWrite with StreamingWrite
     with RequiresDistributionAndOrdering {
   override def toBatch: BatchWrite = this
@@ -338,7 +342,7 @@ private class GraftWrite(warehouse: String, table: String, schema: StructType,
         val store = new TableStore(spark, warehouse)
         val staged = stagedOf(messages)
         store.commitStaged(table, resolveKept(store, staged), staged,
-          operation, resolvedSchemaJson(store))
+          operation, resolvedSchemaJson(store), baseVersion = baseVersion)
         cleanup(stagingDir)
     }
 

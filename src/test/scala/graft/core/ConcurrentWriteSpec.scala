@@ -117,6 +117,44 @@ class ConcurrentWriteSpec extends SparkSpec {
     }
   }
 
+  test("compactWhere surfaces an append that lands during its region read") {
+    val wh = java.nio.file.Files.createTempDirectory("graft_race_cw").toString
+    new TableStore(spark, wh).commit("t",
+      (0L until 100L).map(i => (i, i)).toDF("id", "v"), "create")
+    val store = new RivalBeforeRead(wh)
+    store.rival = Some(() => {
+      new TableStore(spark, wh).append("t", Seq((999L, 0L)).toDF("id", "v"))
+      ()
+    })
+    intercept[TableStore.CommitConflictException](
+      store.compactWhere("t", "id", 0L, 50L))
+    assert(store.rival.isEmpty, "the rival never ran")
+    val ids = store.read("t").select("id").as[Long].collect()
+    assert(ids.length == 101 && ids.contains(999L))
+  }
+
+  test("SQL UPDATE surfaces a commit that lands during its write job") {
+    val wh = java.nio.file.Files.createTempDirectory("graft_race_upd").toString
+    val cat = s"grace${System.nanoTime()}"
+    spark.conf.set(s"spark.sql.catalog.$cat", classOf[graft.catalog.GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    val store = new TableStore(spark, wh)
+    store.commit("t", Seq((1L, 10L), (2L, 20L)).toDF("id", "v"), "create")
+    val extra = java.nio.file.Files.createTempDirectory("graft_race_extra").toString
+    Seq((3L, 30L)).toDF("id", "v").coalesce(1).write.mode("overwrite").parquet(extra)
+    ConcurrentWriteSpec.rival = Some(() => { store.addFiles("t", extra); () })
+    // fires the rival from inside the UPDATE's write job, once
+    spark.udf.register("rival_hook", (v: Long) => { ConcurrentWriteSpec.fireRival(); v + 1 })
+    val e = intercept[Exception](
+      spark.sql(s"UPDATE $cat.ns.t SET v = rival_hook(v) WHERE id = 2"))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[TableStore.CommitConflictException]), e)
+    assert(ConcurrentWriteSpec.rival.isEmpty, "the rival never ran")
+    assert(store.manifests("t").map(_.operation) == Seq("create", "add_files"))
+    assert(store.read("t").as[(Long, Long)].collect().toSet ==
+      Set((1L, 10L), (2L, 20L), (3L, 30L)))
+  }
+
   test("concurrent scd2Complex and appends all land") {
     val wh = java.nio.file.Files.createTempDirectory("graft_race_scd2c").toString
     scd2Table(wh)
@@ -133,5 +171,17 @@ class ConcurrentWriteSpec extends SparkSpec {
     }
     assert(currentQty(store) == Seq(("A", 3), ("B", 5), ("N1", 1), ("N2", 2)))
     assert(store.read("t").count() == 7)
+  }
+}
+
+object ConcurrentWriteSpec {
+  /** A rival commit for a task-side hook to fire: tasks of a local-mode
+    * job run in this JVM, so a UDF can reach it through this object. */
+  @volatile var rival: Option[() => Unit] = None
+
+  def fireRival(): Unit = synchronized {
+    val r = rival
+    rival = None
+    r.foreach(_())
   }
 }
