@@ -2348,7 +2348,8 @@ class TableStore(spark: SparkSession, val warehouse: String) {
         "carry no version sequence, so compact the table first")
     val id = java.util.UUID.randomUUID().toString.take(8)
     val entries = writeDataFiles(new Path(tableDir(table), s"stage-$id"), s"stage-$id",
-      alignTo(df, schemaOf(m.schemaJson)), m.partitionBy, Seq.empty, m.columnMap.toMap)
+      checked(alignTo(df, schemaOf(m.schemaJson)), m.constraints), m.partitionBy,
+      Seq.empty, m.columnMap.toMap)
     // The staged manifest reuses the snapshot JSON shape (version 0 =
     // "not a version") and records ONLY the new entries: publish composes
     // them with whatever the table's files are AT PUBLISH time, so an

@@ -1,25 +1,30 @@
 package org.apache.spark.sql.graft
 
 import graft.core.TableStore
+import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.vectorized.{ColumnarArray, ColumnarBatch, ColumnarMap, ColumnVector}
 import org.apache.spark.unsafe.types.UTF8String
+import org.roaringbitmap.RoaringBitmap
 
 /** SQL reads over merge-on-read tables: the scan applies equality AND
   * positional deletes itself, Iceberg-style, instead of refusing.
   *
-  * Equality deletes: the snapshot's data files group by their commit
-  * sequence (`v=N/` path prefix, ≤ #commits groups); each group plans
-  * Spark's own pruned parquet scan, and every emitted row is checked
-  * against a broadcast (key → max delete sequence) map — a row survives
-  * iff no delete with a LARGER sequence than its file's covers its key
-  * (same-version new images survive, Iceberg v2 semantics). Key columns
-  * are forced into the read schema (Spark projects them back out), so
-  * column pruning still reaches the parquet scan.
+  * Equality deletes: every emitted row is checked against a broadcast
+  * (key → max delete sequence) map — a row survives iff no delete with a
+  * LARGER sequence than its file's covers its key (same-version new
+  * images survive, Iceberg v2 semantics). A data file's sequence is the
+  * commit version in its `v=N/` path prefix ([[TableStore.fileSeqOf]]).
+  * Key columns are forced into the read schema (Spark projects them back
+  * out), so column pruning still reaches the parquet scan.
   *
   * Positional deletes mask (relative file path, row index) pairs of
   * immutable files. Row indexes come from the parquet readers themselves:
@@ -28,19 +33,25 @@ import org.apache.spark.unsafe.types.UTF8String
   * both the vectorized and parquet-mr readers populate with the TRUE
   * within-file row index — computed from row-group offsets, so it
   * survives predicate pushdown, row-group/page skipping, AND byte-range
-  * splits. The positional path therefore keeps pushed filters and
-  * per-split parallelism (the r6 path planned one sequential unfiltered
-  * task per file and reconstructed positions by counting — the "read
-  * tax until compaction" is gone). The index column is appended LAST to
-  * the pruned schema and stripped before rows/batches are emitted, so
-  * the scan's declared output schema is unchanged.
+  * splits. The index column is appended LAST to the pruned schema and
+  * stripped before rows/batches are emitted, so the scan's declared
+  * output schema is unchanged.
   *
-  * Scale shape: both lookup sides are churn-sized and shipped ONCE per
-  * executor via real broadcasts; the delete load is one tiny
-  * column-pruned job at plan time. Honest cap: beyond `morMaxDeleteKeys`
-  * (default 4M) the scan refuses and points at `CALL compact` — the
-  * library read path ([[TableStore.read]]) joins instead of broadcasting
-  * and has no cap.
+  * Scale shape: a MoR scan costs what a plain scan costs. It plans ONE
+  * inner parquet scan over the snapshot's files and splits that scan's
+  * file partitions so each holds files of a single sequence (equality)
+  * or a single file (positional) — Spark's own split sizing and packing,
+  * one reader factory, one Hadoop-conf broadcast. The delete side is
+  * loaded once per delete-file set, not once per query: delete files are
+  * create-once and uniquely named (`v=N/deletes-<uuid>/...`), so the
+  * loaded lookup and delete vectors are memoized process-wide, keyed by
+  * table root, delete entries (path, sequence) and key schema, and a
+  * miss reads all of a snapshot's equality delete files in ONE job (each
+  * row's sequence from its file path). Both lookup sides are churn-sized
+  * and shipped once per executor via real broadcasts. Honest cap: beyond
+  * `morMaxDeleteKeys` (default 4M) the scan refuses — memo hits
+  * included — and points at `CALL compact`; the library read path
+  * ([[TableStore.read]]) joins instead of broadcasting and has no cap.
   *
   * Vectorized reads survive: when the inner parquet scan supports
   * columnar batches, the delete filter is applied per BATCH — surviving
@@ -60,75 +71,137 @@ object MorScan {
     case other => other
   }
 
-  private def requireUnderCap(spark: SparkSession, tableDir: String,
-      dels: Seq[TableStore.DeleteEntry], maxKeys: Long): Unit = {
-    val declared = dels.map(_.rowCount).sum
-    val total =
-      if (declared > 0 || dels.isEmpty) declared
-      else spark.read.parquet(
-        dels.map(d => s"$tableDir/${d.path}"): _*).count()
+  /** Job description of every delete-file load, so a listener (or the
+    * Spark UI) can tell the delete side of a MoR read from its scan. */
+  val DeleteLoadJob = "graft merge-on-read delete load"
+
+  /** Delete keys the memo holds before it is cleared wholesale: lookup
+    * entries, masked positions, and the delete entries of each memo key.
+    * A single load above it is not kept. */
+  private val MemoMaxKeys = 1000000L
+
+  /** Loaded delete sides by (qualified table root, sorted delete entries
+    * as (path, sequence), key schema) → (lookup or delete vectors, delete
+    * rows they were loaded from). */
+  private val memo = new java.util.concurrent.ConcurrentHashMap[
+    (String, Seq[(String, Long)], StructType), (AnyRef, Long)]()
+  private val memoKeys = new java.util.concurrent.atomic.AtomicLong()
+
+  private val PosSchema = StructType(Seq(
+    StructField("__file", StringType), StructField("__pos", LongType)))
+
+  private def qualified(spark: SparkSession, dir: String): String = {
+    val p = new Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(p).toString.stripSuffix("/")
+  }
+
+  private def describedAs[T](spark: SparkSession)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty(SparkContext.SPARK_JOB_DESCRIPTION)
+    sc.setJobDescription(DeleteLoadJob)
+    try body finally sc.setLocalProperty(SparkContext.SPARK_JOB_DESCRIPTION, prev)
+  }
+
+  private def requireUnderCap(total: Long, maxKeys: Long): Unit =
     require(total <= maxKeys,
       s"merge-on-read table carries $total delete keys (cap $maxKeys for " +
         "broadcast SQL reads); run CALL compact to materialize the deletes, " +
         "or read through the library API (TableStore.read) which joins " +
         "instead of broadcasting")
+
+  /** The delete side loaded from `dels` (a lookup or delete vectors and
+    * its entry count), served from the memo after the first load of this
+    * exact delete-file set. The cap is checked on every call, before a
+    * miss loads anything. */
+  private def memoized[T <: AnyRef](spark: SparkSession, tableDir: String,
+      dels: Seq[TableStore.DeleteEntry], schema: StructType,
+      maxKeys: Long)(load: => (T, Long)): T = {
+    val key = (qualified(spark, tableDir), dels.map(d => (d.path, d.seq)).sorted, schema)
+    val hit = memo.get(key)
+    if (hit != null) {
+      requireUnderCap(hit._2, maxKeys)
+      hit._1.asInstanceOf[T]
+    } else {
+      val declared = dels.map(_.rowCount).sum
+      val rows =
+        if (declared > 0 || dels.isEmpty) declared
+        else describedAs(spark)(spark.read.parquet(
+          dels.map(d => s"$tableDir/${d.path}"): _*).count())
+      requireUnderCap(rows, maxKeys)
+      val (loaded, size) = describedAs(spark)(load)
+      val held = size + dels.size
+      if (held <= MemoMaxKeys) {
+        if (memoKeys.addAndGet(held) > MemoMaxKeys) {
+          memo.clear()
+          memoKeys.set(held)
+        }
+        memo.put(key, (loaded, rows))
+      }
+      loaded
+    }
   }
 
   /** (key tuple → max delete sequence) from the snapshot's EQUALITY
-    * delete files — one column-pruned driver-collected job, capped at
-    * `maxKeys`. */
+    * delete files, capped at `maxKeys`. A miss reads every file in one
+    * column-pruned, driver-collected job; each row's sequence is its
+    * file's entry sequence, found by the row's `_metadata.file_path`. */
   def deleteLookup(spark: SparkSession, tableDir: String,
       eqDels: Seq[TableStore.DeleteEntry], keySchema: StructType,
-      maxKeys: Long): Map[Seq[Any], Long] = {
-    requireUnderCap(spark, tableDir, eqDels, maxKeys)
-    val acc = scala.collection.mutable.HashMap.empty[Seq[Any], Long]
-    eqDels.groupBy(_.seq).foreach { case (seq, dels) =>
-      val rows = spark.read.schema(keySchema)
-        .parquet(dels.map(d => s"$tableDir/${d.path}"): _*)
+      maxKeys: Long): Map[Seq[Any], Long] =
+    memoized(spark, tableDir, eqDels, keySchema, maxKeys) {
+      val df = spark.read.schema(keySchema)
+        .parquet(eqDels.map(d => s"$tableDir/${d.path}"): _*)
+      val fi = keySchema.length
+      val rows = df.select(keySchema.fieldNames.toSeq.map(n =>
+          col("`" + n.replace("`", "``") + "`")) :+
+          col("_metadata.file_path"): _*)
         .queryExecution.executedPlan.executeCollect()
+      val acc = scala.collection.mutable.HashMap.empty[Seq[Any], Long]
+      var lastPath: UTF8String = null
+      var seq = 0L
       rows.foreach { r =>
+        val p = r.getUTF8String(fi)
+        if (!p.equals(lastPath)) {
+          lastPath = p
+          val s = p.toString
+          seq = eqDels.find(d => s.endsWith("/" + d.path)).map(_.seq)
+            .getOrElse(throw new IllegalStateException(
+              s"delete row from $s, which is no delete file of the snapshot"))
+        }
         val key = keySchema.fields.indices.map(i =>
           norm(r.get(i, keySchema.fields(i).dataType)))
-        val prev = acc.getOrElse(key, Long.MinValue)
-        if (seq > prev) acc(key) = seq
+        if (seq > acc.getOrElse(key, Long.MinValue)) acc(key) = seq
       }
+      (acc.toMap, acc.size.toLong)
     }
-    acc.toMap
-  }
 
   /** The positional mask from the snapshot's POSITIONAL delete files, as
     * per-data-file DELETE VECTORS — one roaring bitmap of row indexes per
-    * masked file (Iceberg v3's representation). vs the old
-    * `Set[(path, pos)]` of boxed tuples this is ~50× smaller in memory
-    * and on the broadcast wire (run-length-compressed bitmap vs ~150 B
-    * per entry), and membership is an O(1) bitmap probe resolved ONCE
-    * per partition, not a hash of a freshly allocated tuple per row.
+    * masked file (Iceberg v3's representation): ~50× smaller than boxed
+    * (path, pos) tuples in memory and on the broadcast wire, and
+    * membership is an O(1) bitmap probe resolved ONCE per partition.
     * Positions are row indexes within one parquet file, so they fit int
-    * (enforced); paths are immutable, no sequence logic. */
+    * (enforced); paths are immutable, no sequence logic. Memoized like
+    * [[deleteLookup]]. */
   def posDeleteVectors(spark: SparkSession, tableDir: String,
       posDels: Seq[TableStore.DeleteEntry],
-      maxKeys: Long): Map[String, org.roaringbitmap.RoaringBitmap] = {
-    requireUnderCap(spark, tableDir, posDels, maxKeys)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("__file",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("__pos",
-        org.apache.spark.sql.types.LongType)))
-    val acc = scala.collection.mutable.HashMap
-      .empty[String, org.roaringbitmap.RoaringBitmap]
-    spark.read.schema(schema)
-      .parquet(posDels.map(d => s"$tableDir/${d.path}"): _*)
-      .queryExecution.executedPlan.executeCollect()
-      .foreach { r =>
-        val p = r.getLong(1)
-        require(p >= 0 && p <= Int.MaxValue,
-          s"positional delete row index out of int range: $p")
-        acc.getOrElseUpdate(r.getUTF8String(0).toString,
-          new org.roaringbitmap.RoaringBitmap()).add(p.toInt)
-      }
-    acc.foreach(_._2.runOptimize())
-    acc.toMap
-  }
+      maxKeys: Long): Map[String, RoaringBitmap] =
+    memoized(spark, tableDir, posDels, PosSchema, maxKeys) {
+      val acc = scala.collection.mutable.HashMap.empty[String, RoaringBitmap]
+      spark.read.schema(PosSchema)
+        .parquet(posDels.map(d => s"$tableDir/${d.path}"): _*)
+        .queryExecution.executedPlan.executeCollect()
+        .foreach { r =>
+          val p = r.getLong(1)
+          require(p >= 0 && p <= Int.MaxValue,
+            s"positional delete row index out of int range: $p")
+          acc.getOrElseUpdate(r.getUTF8String(0).toString,
+            new RoaringBitmap()).add(p.toInt)
+        }
+      acc.foreach(_._2.runOptimize())
+      (acc.toMap, acc.valuesIterator.map(_.getLongCardinality).sum)
+    }
 
   def keep(row: InternalRow, fileSeq: Long, keyOrdinals: Array[Int],
       keyTypes: Array[DataType], lookup: Map[Seq[Any], Long]): Boolean = {
@@ -140,12 +213,13 @@ object MorScan {
 
   /** Build the right MoR scan for the snapshot's delete mix. `readSchema`
     * must already contain the equality key columns (callers force them
-    * in); `scanOver` plans a pruned parquet scan over a file subset with
+    * in); `scanOver` plans a pruned parquet scan over a file set with
     * the caller's pushdown state replayed; `scanOverRowIdx` plans the
     * same filtered scan with the parquet row-index temporary column
     * appended to the pruned schema — the readers fill it with the true
     * within-file row index, so positional masks apply under pushdown and
-    * row-group skipping. Manifest-level FILE pruning stays safe on both
+    * row-group skipping. Exactly one of the two is called, once, over
+    * all of `files`. Manifest-level FILE pruning stays safe on both
     * paths — an entirely-skipped file emits no rows and its mask entries
     * are never consulted. */
   def buildScan(spark: SparkSession, root: String, name: String,
@@ -167,18 +241,40 @@ object MorScan {
       else deleteLookup(spark, root, eqDels, keySchema, maxKeys)
     val keyOrdinals = keyCols.map(readSchema.fieldIndex).toArray
     val keyTypes = keyOrdinals.map(i => readSchema.fields(i).dataType)
-    if (posDels.isEmpty) {
-      val groups = files.groupBy(fe => TableStore.fileSeqOf(fe.path))
-        .toSeq.sortBy(_._1)
-        .map { case (seq, fes) => (seq, scanOver(fes)) }
-      new GraftMorScan(spark, name, readSchema, groups, lookup,
+    // the inner scan's files are ManifestFileIndex paths: root-qualified
+    // table-relative entry paths, mapped back to their entries here
+    val qroot = new Path(qualified(spark, root))
+    val entryOf = files.map(fe =>
+      SparkPath.fromPath(new Path(qroot, fe.path)) -> fe).toMap
+    if (posDels.isEmpty)
+      new GraftMorScan(spark, name, readSchema, scanOver(files), entryOf,
+        lookup, keyOrdinals, keyTypes, files)
+    else
+      new GraftPosMorScan(spark, name, readSchema, scanOverRowIdx(files),
+        entryOf, lookup, posDeleteVectors(spark, root, posDels, maxKeys),
         keyOrdinals, keyTypes, files)
-    } else {
-      val pos = posDeleteVectors(spark, root, posDels, maxKeys)
-      val fileScans = files.sortBy(_.path).map(fe =>
-        (TableStore.fileSeqOf(fe.path), fe.path, scanOverRowIdx(Seq(fe))))
-      new GraftPosMorScan(spark, name, readSchema, fileScans, lookup, pos,
-        keyOrdinals, keyTypes, files)
+  }
+
+  /** `inner`'s file partitions split so each holds the files of one
+    * `keyOf` value (Spark packs small files of any kind together), in
+    * planned order and re-indexed. */
+  private[graft] def splitPartitions[K](inner: Batch,
+      entryOf: Map[SparkPath, TableStore.FileEntry],
+      keyOf: TableStore.FileEntry => K): Array[(K, FilePartition)] = {
+    var idx = -1
+    inner.planInputPartitions().flatMap { case fp: FilePartition =>
+      val byKey = scala.collection.mutable.LinkedHashMap
+        .empty[K, scala.collection.mutable.ArrayBuffer[PartitionedFile]]
+      fp.files.foreach { pf =>
+        val fe = entryOf.getOrElse(pf.filePath, throw new IllegalStateException(
+          s"scan file ${pf.filePath} is no data file of the snapshot"))
+        byKey.getOrElseUpdate(keyOf(fe),
+          scala.collection.mutable.ArrayBuffer.empty) += pf
+      }
+      byKey.map { case (k, pfs) =>
+        idx += 1
+        (k, FilePartition(idx, pfs.toArray))
+      }
     }
   }
 
@@ -190,7 +286,7 @@ object MorScan {
   private[graft] def survivors(batch: ColumnarBatch, fileSeq: Long,
       keyOrdinals: Array[Int], keyTypes: Array[DataType],
       lookup: Map[Seq[Any], Long],
-      posVec: ColumnVector, dv: org.roaringbitmap.RoaringBitmap): Array[Int] = {
+      posVec: ColumnVector, dv: RoaringBitmap): Array[Int] = {
     val n = batch.numRows()
     val out = new Array[Int](n)
     var kept = 0
@@ -253,31 +349,32 @@ private final class MappedVector(inner: ColumnVector, map: Array[Int])
     new MappedVector(inner.getChild(ordinal), map)
 }
 
-/** The equality-delete MoR read scan: per-sequence-group parquet scans
-  * unioned behind one Batch, rows (or columnar batches) filtered through
-  * the broadcast delete lookup. */
+/** The equality-delete MoR read scan: ONE inner parquet scan whose file
+  * partitions are split by data-file sequence, rows (or columnar batches)
+  * filtered through the broadcast delete lookup. */
 final class GraftMorScan(spark: SparkSession, name: String,
-    readSchemaWithKeys: StructType, groups: Seq[(Long, Scan)],
+    readSchemaWithKeys: StructType, inner: Scan,
+    entryOf: Map[SparkPath, TableStore.FileEntry],
     lookup: Map[Seq[Any], Long], keyOrdinals: Array[Int],
     keyTypes: Array[DataType], files: Seq[TableStore.FileEntry])
     extends Scan with Batch with SupportsReportStatistics {
 
+  private lazy val innerBatch = inner.toBatch
+
   override def readSchema(): StructType = readSchemaWithKeys
   override def toBatch: Batch = this
   override def description(): String =
-    s"GraftMorScan $name [${groups.size} seq groups, ${lookup.size} delete keys]"
+    s"GraftMorScan $name [${files.map(fe => TableStore.fileSeqOf(fe.path))
+      .distinct.size} seq groups, ${lookup.size} delete keys]"
 
   override def planInputPartitions(): Array[InputPartition] =
-    groups.zipWithIndex.flatMap { case ((seq, scan), gi) =>
-      scan.toBatch.planInputPartitions().map(p =>
-        MorInputPartition(gi, seq, p): InputPartition)
-    }.toArray
+    MorScan.splitPartitions(innerBatch, entryOf,
+        fe => TableStore.fileSeqOf(fe.path))
+      .map { case (seq, fp) => MorInputPartition(seq, fp): InputPartition }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val inner = groups.map(_._2.toBatch.createReaderFactory()).toArray
-    new MorReaderFactory(inner,
+  override def createReaderFactory(): PartitionReaderFactory =
+    new MorReaderFactory(innerBatch.createReaderFactory(),
       spark.sparkContext.broadcast(lookup), keyOrdinals, keyTypes)
-  }
 
   // upper bound (deleted rows included) — still far better than planner
   // defaults for broadcast decisions
@@ -289,47 +386,48 @@ final class GraftMorScan(spark: SparkSession, name: String,
   }
 }
 
-/** The positional(-and-equality) MoR read scan: per-file filtered parquet
-  * scans whose read schema carries the parquet row-index temporary column
-  * (populated by the readers with true within-file positions), flattened
-  * to ONE input partition per byte-range split — full split parallelism
-  * and pushdown, positions immune to row-group skipping. The declared
-  * output schema excludes the index column; readers strip it. */
+/** The positional(-and-equality) MoR read scan: ONE inner filtered
+  * parquet scan whose read schema carries the parquet row-index temporary
+  * column (populated by the readers with true within-file positions),
+  * its file partitions split to one data file each — full byte-range
+  * split parallelism and pushdown, positions immune to row-group
+  * skipping. The declared output schema excludes the index column;
+  * readers strip it. */
 final class GraftPosMorScan(spark: SparkSession, name: String,
-    readSchemaWithKeys: StructType, fileScans: Seq[(Long, String, Scan)],
-    lookup: Map[Seq[Any], Long], pos: Map[String, org.roaringbitmap.RoaringBitmap],
+    readSchemaWithKeys: StructType, inner: Scan,
+    entryOf: Map[SparkPath, TableStore.FileEntry],
+    lookup: Map[Seq[Any], Long], pos: Map[String, RoaringBitmap],
     keyOrdinals: Array[Int], keyTypes: Array[DataType],
     files: Seq[TableStore.FileEntry])
     extends Scan with Batch with SupportsReportStatistics {
 
+  private lazy val innerBatch = inner.toBatch
+
   // Resolved by NAME against the inner scan's actual read schema — a
   // Spark change to pruned-schema ordering would surface here at plan
   // time instead of desynchronizing positions silently.
-  private[graft] val rowIdxOrdinal: Int = {
-    val inner = fileScans.head._3.readSchema()
-    inner.fieldIndex(org.apache.spark.sql.execution.datasources.parquet
-      .ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME)
-  }
+  private[graft] val rowIdxOrdinal: Int =
+    inner.readSchema().fieldIndex(org.apache.spark.sql.execution.datasources
+      .parquet.ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME)
 
   override def readSchema(): StructType = readSchemaWithKeys
   override def toBatch: Batch = this
   override def description(): String =
-    s"GraftPosMorScan $name [${fileScans.size} files, " +
+    s"GraftPosMorScan $name [${files.size} files, " +
       s"${pos.valuesIterator.map(_.getLongCardinality).sum} positional " +
       s"(${pos.size} delete vectors) + ${lookup.size} equality delete keys]"
 
   override def planInputPartitions(): Array[InputPartition] =
-    fileScans.zipWithIndex.flatMap { case ((seq, relPath, scan), fi) =>
-      scan.toBatch.planInputPartitions().map(p =>
-        PosMorInputPartition(fi, seq, relPath, p): InputPartition)
-    }.toArray
+    MorScan.splitPartitions(innerBatch, entryOf, identity)
+      .map { case (fe, fp) =>
+        PosMorInputPartition(TableStore.fileSeqOf(fe.path), fe.path, fp)
+          : InputPartition
+      }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val inner = fileScans.map(_._3.toBatch.createReaderFactory()).toArray
-    new PosMorReaderFactory(inner, spark.sparkContext.broadcast(lookup),
-      spark.sparkContext.broadcast(pos), keyOrdinals, keyTypes,
-      readSchemaWithKeys, rowIdxOrdinal)
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    new PosMorReaderFactory(innerBatch.createReaderFactory(),
+      spark.sparkContext.broadcast(lookup), spark.sparkContext.broadcast(pos),
+      keyOrdinals, keyTypes, readSchemaWithKeys, rowIdxOrdinal)
 
   override def estimateStatistics(): Statistics = new Statistics {
     override def sizeInBytes(): java.util.OptionalLong =
@@ -339,26 +437,24 @@ final class GraftPosMorScan(spark: SparkSession, name: String,
   }
 }
 
-private case class MorInputPartition(group: Int, seq: Long,
-    inner: InputPartition) extends InputPartition
+private case class MorInputPartition(seq: Long, inner: FilePartition)
+    extends InputPartition
 
-private case class PosMorInputPartition(file: Int, seq: Long,
-    relPath: String, inner: InputPartition) extends InputPartition
+private case class PosMorInputPartition(seq: Long, relPath: String,
+    inner: FilePartition) extends InputPartition
 
-private class MorReaderFactory(inner: Array[PartitionReaderFactory],
+private class MorReaderFactory(inner: PartitionReaderFactory,
     lookup: Broadcast[Map[Seq[Any], Long]], keyOrdinals: Array[Int],
     keyTypes: Array[DataType]) extends PartitionReaderFactory {
 
   // vectorized reads survive the delete filter via the per-batch row-id
   // mapping — delegate the columnar decision to the parquet factory
-  override def supportColumnarReads(partition: InputPartition): Boolean = {
-    val mp = partition.asInstanceOf[MorInputPartition]
-    inner(mp.group).supportColumnarReads(mp.inner)
-  }
+  override def supportColumnarReads(partition: InputPartition): Boolean =
+    inner.supportColumnarReads(partition.asInstanceOf[MorInputPartition].inner)
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val mp = partition.asInstanceOf[MorInputPartition]
-    val r = inner(mp.group).createReader(mp.inner)
+    val r = inner.createReader(mp.inner)
     new PartitionReader[InternalRow] {
       private var current: InternalRow = _
       override def next(): Boolean = {
@@ -378,7 +474,7 @@ private class MorReaderFactory(inner: Array[PartitionReaderFactory],
 
   override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] = {
     val mp = partition.asInstanceOf[MorInputPartition]
-    val r = inner(mp.group).createColumnarReader(mp.inner)
+    val r = inner.createColumnarReader(mp.inner)
     new PartitionReader[ColumnarBatch] {
       private var current: ColumnarBatch = _
       override def next(): Boolean = {
@@ -397,21 +493,19 @@ private class MorReaderFactory(inner: Array[PartitionReaderFactory],
   }
 }
 
-private class PosMorReaderFactory(inner: Array[PartitionReaderFactory],
+private class PosMorReaderFactory(inner: PartitionReaderFactory,
     lookup: Broadcast[Map[Seq[Any], Long]],
-    pos: Broadcast[Map[String, org.roaringbitmap.RoaringBitmap]],
+    pos: Broadcast[Map[String, RoaringBitmap]],
     keyOrdinals: Array[Int],
     keyTypes: Array[DataType], outSchema: StructType,
     rowIdxOrdinal: Int) extends PartitionReaderFactory {
 
-  override def supportColumnarReads(partition: InputPartition): Boolean = {
-    val mp = partition.asInstanceOf[PosMorInputPartition]
-    inner(mp.file).supportColumnarReads(mp.inner)
-  }
+  override def supportColumnarReads(partition: InputPartition): Boolean =
+    inner.supportColumnarReads(partition.asInstanceOf[PosMorInputPartition].inner)
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val mp = partition.asInstanceOf[PosMorInputPartition]
-    val r = inner(mp.file).createReader(mp.inner)
+    val r = inner.createReader(mp.inner)
     val dv = pos.value.getOrElse(mp.relPath, null)
     new PartitionReader[InternalRow] {
       // strips the trailing row-index column: one reusable projecting
@@ -438,7 +532,7 @@ private class PosMorReaderFactory(inner: Array[PartitionReaderFactory],
 
   override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] = {
     val mp = partition.asInstanceOf[PosMorInputPartition]
-    val r = inner(mp.file).createColumnarReader(mp.inner)
+    val r = inner.createColumnarReader(mp.inner)
     val dv = pos.value.getOrElse(mp.relPath, null)
     new PartitionReader[ColumnarBatch] {
       private var current: ColumnarBatch = _

@@ -265,10 +265,10 @@ class StoreReadScanBuilder(spark: SparkSession, name: String,
       toLogical = logiSchema)
   }
 
-  /** Merge-on-read snapshot: pruned parquet scans + broadcast delete
-    * filters — equality, positional, or both (see [[MorScan.buildScan]]).
-    * Equality key columns are forced into the pruned schema — Spark
-    * projects them back out. */
+  /** Merge-on-read snapshot: one pruned parquet scan over the kept files
+    * + broadcast delete filters — equality, positional, or both (see
+    * [[MorScan.buildScan]]). Equality key columns are forced into the
+    * pruned schema — Spark projects them back out. */
   private def buildMorScan(): Scan = {
     val keyCols = m.deleteFiles.filterNot(TableStore.isPositional)
       .headOption.map(_.keyCols).getOrElse(Seq.empty)

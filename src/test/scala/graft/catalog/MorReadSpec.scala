@@ -1,17 +1,19 @@
 package graft.catalog
 
-import graft.SparkSpec
+import graft.{GraftSession, SparkSpec}
 import graft.core.TableStore
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** SQL reads over merge-on-read tables: the DSv2 scan applies equality
-  * deletes itself (per-sequence-group parquet scans + a broadcast delete
-  * filter), so SELECTs — filtered, pruned, aggregated, time-traveled —
+  * deletes itself (one parquet scan split by file sequence + a broadcast
+  * delete filter loaded once per delete-file set), so SELECTs — filtered, pruned, aggregated, time-traveled —
   * work without materializing; row-level SQL writes plan their rewrite
   * over the same delete-aware scan, materializing the overlay they touch.
   */
 class MorReadSpec extends SparkSpec {
   import spark.implicits._
+  import MorReadSpec.morScans
 
   private def withCatalog(f: (TableStore, String) => Unit): Unit = {
     val wh = tmpDir("graft_morread")
@@ -142,25 +144,6 @@ class MorReadSpec extends SparkSpec {
     }
   }
 
-  private def morScans(df: org.apache.spark.sql.DataFrame)
-      : Seq[org.apache.spark.sql.execution.datasources.v2.BatchScanExec] = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def walk(p: SparkPlan): Seq[SparkPlan] = {
-      val kids = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case s: QueryStageExec => Seq(s.plan)
-        case o => o.children
-      }
-      p +: kids.flatMap(walk)
-    }
-    walk(df.queryExecution.executedPlan).collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-        if b.scan.isInstanceOf[org.apache.spark.sql.graft.GraftMorScan] ||
-           b.scan.isInstanceOf[org.apache.spark.sql.graft.GraftPosMorScan] => b
-    }
-  }
-
   test("MoR SQL reads stay vectorized: the delete filter survives a columnar scan") {
     withCatalog { (store, cat) =>
       seed(store)
@@ -206,6 +189,111 @@ class MorReadSpec extends SparkSpec {
     }
   }
 
+  test("the delete side loads in one job on the first SELECT of a snapshot, then never again") {
+    withCatalog { (store, cat) =>
+      seed(store)
+      assert(store.manifests("t").maxBy(_.version).deleteFiles
+        .map(_.seq).distinct.size >= 2)
+      val first = MorReadSpec.deleteLoads(spark) {
+        assert(spark.sql(s"SELECT count(*) FROM $cat.ns.t").head.getLong(0) == 90L)
+      }
+      assert(first == 1, s"first read ran $first delete-file jobs")
+      val again = MorReadSpec.deleteLoads(spark) {
+        assert(spark.sql(s"SELECT s FROM $cat.ns.t WHERE id = 1")
+          .head.getString(0) == "uu1")
+        assert(spark.sql(s"SELECT count(*) FROM $cat.ns.t a JOIN $cat.ns.t b " +
+          "ON a.id = b.id").head.getLong(0) == 90L)
+      }
+      assert(again == 0, s"later reads ran $again delete-file jobs")
+    }
+  }
+
+  test("the delete memo never serves another snapshot's deletes") {
+    withCatalog { (store, cat) =>
+      seed(store)                                  // v1 base .. v4
+      def rowsOf(df: org.apache.spark.sql.DataFrame) =
+        df.select(col("id"), col("s"), col("v"))
+          .as[(Long, String, Double)].collect().toSet
+      val lib = scala.collection.mutable.Map.empty[Long, Set[(Long, String, Double)]]
+      def libAt(v: Long) = lib.getOrElseUpdate(v, rowsOf(store.readVersion("t", v)))
+      def check(v: Long): Unit = assert(
+        rowsOf(spark.sql(s"SELECT id, s, v FROM $cat.ns.t VERSION AS OF $v")) ==
+          libAt(v), s"version $v")
+      check(4)
+      val v5 = store.applyCdcMoR("t", Seq(
+          (1L, "c1", 3000.0, false), (50L, "x", 0.0, true),
+          (200L, "n200", 1.0, false)).toDF("id", "s", "v", "del"),
+        Seq("id"), "del")
+      check(v5)
+      val v6 = store.compact("t")
+      assert(store.manifests("t").find(_.version == v6).get.deleteFiles.isEmpty)
+      check(v6)
+      val v7 = store.rollbackTo("t", 3)
+      assert(store.manifests("t").find(_.version == v7).get.deleteFiles.nonEmpty)
+      assert(rowsOf(spark.sql(s"SELECT id, s, v FROM $cat.ns.t")) ==
+        rowsOf(store.read("t")))
+      Seq(3L, v5, 4L, v5, 3L).foreach(check)
+      // the versions really differ, so a shared lookup could not pass
+      assert(libAt(3) != libAt(4) && libAt(4) != libAt(v5))
+    }
+  }
+
+  test("one inner scan: packed and byte-range-split files apply deletes by their own sequence") {
+    withCatalog { (store, cat) =>
+      GraftSession.withConf(spark, "parquet.block.size" -> "4096") {
+        store.commit("w", (1 to 3000).map(i => (i.toLong, "x" * 32 + i))
+          .toDF("id", "s").coalesce(1), "create")
+        store.upsertMoR("w", (1 to 3000 by 3).map(i => (i.toLong, s"u$i"))
+          .toDF("id", "s").coalesce(1), Seq("id"))
+        store.deleteKeysMoR("w", (2 to 3000 by 7).map(_.toLong).toDF("id"),
+          Seq("id"))
+        store.upsertMoR("w", (1 to 3000 by 5).map(i => (i.toLong, s"v$i"))
+          .toDF("id", "s").coalesce(1), Seq("id"))
+      }
+      val m = store.manifests("w").maxBy(_.version)
+      val dataSeqs = m.files.map(fe => TableStore.fileSeqOf(fe.path)).distinct
+      assert(dataSeqs.size == 3, m.files.toString)
+      val lib = store.read("w").select(col("id"), col("s"))
+        .as[(Long, String)].collect().toSet
+      assert(lib.contains((1L, "v1")) && lib.contains((4L, "u4")) &&
+        lib.contains((3L, "x" * 32 + 3)) && !lib.exists(_._1 == 9L))
+      def partitions(df: org.apache.spark.sql.DataFrame): Int =
+        morScans(df).map(_.scan.toBatch.planInputPartitions().length).sum
+      // every file packed into one Spark file partition: the scan splits
+      // it into one input partition per sequence
+      GraftSession.withConf(spark, "spark.sql.files.openCostInBytes" -> "1",
+          "spark.sql.files.minPartitionNum" -> "1") {
+        val df = spark.sql(s"SELECT id, s FROM $cat.ns.w")
+        assert(df.as[(Long, String)].collect().toSet == lib)
+        assert(partitions(df) == dataSeqs.size)
+      }
+      // byte-range splits: more input partitions than files
+      GraftSession.withConf(spark, "spark.sql.files.maxPartitionBytes" -> "4096",
+          "spark.sql.files.openCostInBytes" -> "1") {
+        val df = spark.sql(s"SELECT id, s FROM $cat.ns.w")
+        assert(df.as[(Long, String)].collect().toSet == lib)
+        assert(partitions(df) > m.files.size)
+      }
+    }
+  }
+
+  test("the delete-key cap still refuses on a memo hit") {
+    withCatalog { (store, cat) =>
+      seed(store)
+      assert(spark.sql(s"SELECT count(*) FROM $cat.ns.t").head.getLong(0) == 90L)
+      var e: Exception = null
+      val loads = MorReadSpec.deleteLoads(spark) {
+        e = intercept[Exception] {
+          spark.read.option("morMaxDeleteKeys", "3")
+            .table(s"$cat.ns.t").count()
+        }
+      }
+      assert(loads == 0, "the refused read should have been a memo hit")
+      assert(e.getMessage.contains("CALL compact") ||
+        Option(e.getCause).exists(_.getMessage.contains("CALL compact")))
+    }
+  }
+
   test("the delete-key broadcast cap refuses with a compact hint") {
     withCatalog { (store, cat) =>
       seed(store)
@@ -216,5 +304,57 @@ class MorReadSpec extends SparkSpec {
       assert(e.getMessage.contains("CALL compact") ||
         Option(e.getCause).exists(_.getMessage.contains("CALL compact")))
     }
+  }
+}
+
+object MorReadSpec {
+  /** The MoR scans in `df`'s executed plan, adaptive stages included. */
+  def morScans(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.datasources.v2.BatchScanExec] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def walk(p: SparkPlan): Seq[SparkPlan] = {
+      val kids = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case s: QueryStageExec => Seq(s.plan)
+        case o => o.children
+      }
+      p +: kids.flatMap(walk)
+    }
+    walk(df.queryExecution.executedPlan).collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+        if b.scan.isInstanceOf[org.apache.spark.sql.graft.GraftMorScan] ||
+           b.scan.isInstanceOf[org.apache.spark.sql.graft.GraftPosMorScan] => b
+    }
+  }
+
+  /** Delete-file loads (jobs described as [[org.apache.spark.sql.graft
+    * .MorScan.DeleteLoadJob]]) started while `body` runs. Listener events
+    * arrive asynchronously but in order, so a marker job after `body`
+    * bounds the count. */
+  def deleteLoads(spark: SparkSession)(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val loads = new java.util.concurrent.atomic.AtomicInteger()
+    val marker = s"delete-load marker ${System.nanoTime()}"
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.job.description")) match {
+          case Some(org.apache.spark.sql.graft.MorScan.DeleteLoadJob) =>
+            loads.incrementAndGet()
+          case Some(`marker`) => seen.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      require(seen.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener never saw the marker job")
+      loads.get()
+    } finally sc.removeSparkListener(listener)
   }
 }

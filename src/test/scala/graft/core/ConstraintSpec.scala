@@ -43,6 +43,23 @@ class ConstraintSpec extends SparkSpec {
     assert(store.read("t").count() == 3)
   }
 
+  test("write-audit-publish: stageAppend enforces CHECK; nothing is staged or published") {
+    val store = new TableStore(spark, tmpDir("cs"))
+    store.commit("t", Seq((1, 10)).toDF("id", "qty"), "create")
+    store.addCheckConstraint("t", "qty_pos", "qty > 0")
+    val vBefore = store.currentVersion("t")
+    val e = intercept[Exception] {
+      store.publishStaged("t", store.stageAppend("t", Seq((2, -5)).toDF("id", "qty")))
+    }
+    assert(violation(e), s"unexpected: $e")
+    assert(store.stagedIds("t").isEmpty)
+    assert(store.currentVersion("t") == vBefore)
+    assert(store.read("t").as[(Int, Int)].collect().toSeq == Seq((1, 10)))
+    // a conforming stage still publishes
+    store.publishStaged("t", store.stageAppend("t", Seq((3, 7)).toDF("id", "qty")))
+    assert(store.read("t").as[(Int, Int)].collect().toSet == Set((1, 10), (3, 7)))
+  }
+
   test("existing violating rows block constraint creation; NULL passes CHECK") {
     val store = new TableStore(spark, tmpDir("cs"))
     store.commit("t",

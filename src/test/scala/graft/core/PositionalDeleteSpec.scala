@@ -1,6 +1,7 @@
 package graft.core
 
-import graft.SparkSpec
+import graft.{GraftSession, SparkSpec}
+import graft.catalog.MorReadSpec
 import org.apache.spark.sql.functions._
 
 class PositionalDeleteSpec extends SparkSpec {
@@ -203,5 +204,86 @@ class PositionalDeleteSpec extends SparkSpec {
       s"CALL $cat.system.rewrite_position_deletes(`table` => 't')")
       .collect().head
     assert(r.getLong(2) <= 1, r.toString)
+  }
+
+  private def catalogOver(wh: String): String = {
+    val cat = s"gposmemo${System.nanoTime()}"
+    spark.conf.set(s"spark.sql.catalog.$cat",
+      classOf[graft.catalog.GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    cat
+  }
+
+  test("SQL delete vectors load in one job per delete-file set; a memo hit still honours the cap") {
+    val wh = tmpDir("pd_memo")
+    val cat = catalogOver(wh)
+    val store = new TableStore(spark, wh)
+    store.commit("t", (1L to 100L).map(i => (i, i * 1.0)).toDF("id", "v"),
+      "create")
+    store.deleteWhereMoR("t", "id % 10 = 0")
+    store.deleteWhereMoR("t", "id < 4")
+    assert(store.manifests("t").maxBy(_.version).deleteFiles
+      .map(_.seq).distinct.size == 2)
+    val expect = (4L to 100L).filterNot(_ % 10 == 0)
+    val first = MorReadSpec.deleteLoads(spark) {
+      assert(spark.sql(s"SELECT id FROM $cat.ns.t ORDER BY id")
+        .as[Long].collect().toSeq == expect)
+    }
+    assert(first == 1, s"first read ran $first delete-file jobs")
+    val again = MorReadSpec.deleteLoads(spark) {
+      assert(spark.sql(s"SELECT count(*) FROM $cat.ns.t WHERE v > 50")
+        .head.getLong(0) == expect.count(_ > 50))
+    }
+    assert(again == 0, s"a later read ran $again delete-file jobs")
+    // a new positional commit is a new delete-file set: one more load
+    store.deleteWhereMoR("t", "id = 55")
+    val next = MorReadSpec.deleteLoads(spark) {
+      assert(spark.sql(s"SELECT count(*) FROM $cat.ns.t").head.getLong(0) ==
+        expect.size - 1)
+    }
+    assert(next == 1, s"the new snapshot ran $next delete-file jobs")
+    val e = intercept[Exception] {
+      spark.read.option("morMaxDeleteKeys", "3").table(s"$cat.ns.t").count()
+    }
+    assert(e.getMessage.contains("CALL compact") ||
+      Option(e.getCause).exists(_.getMessage.contains("CALL compact")))
+  }
+
+  test("positional and equality masks apply per file when files are packed or split by byte range") {
+    val wh = tmpDir("pd_split")
+    val cat = catalogOver(wh)
+    val store = new TableStore(spark, wh)
+    val pad = "x" * 48
+    GraftSession.withConf(spark, "parquet.block.size" -> "4096") {
+      store.commit("t", (1 to 3000).map(i => (i.toLong, pad + i)).toDF("id", "s")
+        .coalesce(1), "create")
+      store.append("t", (3001 to 6000).map(i => (i.toLong, pad + i))
+        .toDF("id", "s").coalesce(1))
+    }
+    // aperiodic positions in both files, then an equality delete on top
+    store.deleteWhereMoR("t", "id IN (7, 1500, 2999, 3002, 4444, 5999)")
+    store.deleteKeysMoR("t", Seq(10L, 3010L).toDF("id"), Seq("id"))
+    val files = store.manifests("t").maxBy(_.version).files
+    assert(files.size == 2)
+    val masked = Set(7L, 1500L, 2999L, 3002L, 4444L, 5999L, 10L, 3010L)
+    val expect = (1L to 6000L).filterNot(masked)
+    assert(store.read("t").select("id").as[Long].collect().sorted.toSeq == expect)
+    def partitions(df: org.apache.spark.sql.DataFrame): Int =
+      MorReadSpec.morScans(df).map(_.scan.toBatch.planInputPartitions().length).sum
+    // both files packed into one Spark file partition: one input
+    // partition per file
+    GraftSession.withConf(spark, "spark.sql.files.openCostInBytes" -> "1",
+        "spark.sql.files.minPartitionNum" -> "1") {
+      val df = spark.sql(s"SELECT id FROM $cat.ns.t")
+      assert(df.as[Long].collect().sorted.toSeq == expect)
+      assert(partitions(df) == files.size)
+    }
+    // byte-range splits of each file
+    GraftSession.withConf(spark, "spark.sql.files.maxPartitionBytes" -> "4096",
+        "spark.sql.files.openCostInBytes" -> "1") {
+      val df = spark.sql(s"SELECT id FROM $cat.ns.t")
+      assert(df.as[Long].collect().sorted.toSeq == expect)
+      assert(partitions(df) > files.size)
+    }
   }
 }
