@@ -33,6 +33,13 @@ import org.apache.spark.sql.SparkSession
   *    measured pace of this box vs the clean-box estimates (a co-tenant
   *    that slows the headline 2x shrinks what the sections attempt,
   *    instead of overrunning into a SIGKILL).
+  *
+  * After the headline come three sections, all over `SPARK_GRAFT_SF_DIR`:
+  * `overhead` (the snapshot layer vs raw parquet), `mor_tax` (the read
+  * cost of accumulating equality deletes) and `overhead_late` (the
+  * overhead probe again, on the aged session). Curation and TPC-DS
+  * derivation timings are perfbench's (`BENCHMARK.json`), which checks
+  * their answers and bounds them.
   */
 object Bench {
 
@@ -295,8 +302,6 @@ object Bench {
       "q09", "q111", "q120", "q124", "q125", "q129", "q130", "q142", "q15",
       "q164", "q171", "q176", "q25", "q44", "q47", "q69", "q76", "q93")
     val sfShort = new java.io.File(sfDir).getName
-    val tpcdsJsonRef = new java.util.concurrent.atomic.AtomicReference("")
-    val curationJsonRef = new java.util.concurrent.atomic.AtomicReference("")
     val overheadJsonRef = new java.util.concurrent.atomic.AtomicReference("")
     val provisionalLine = new java.util.concurrent.atomic.AtomicReference("")
     val finalPrinted = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -330,17 +335,16 @@ object Bench {
         f""","mx":$maxSpread%.2f,"ov":$spreadViolators""" else ""
       f"""{"metric":"total","value":$total%.1f,"unit":"sec","queries":$qs$qf""" +
         spread +
-        s"""${tpcdsJsonRef.get}${curationJsonRef.get}${overheadJsonRef.get}$part,""" +
+        s"""${overheadJsonRef.get}$part,""" +
         s""""sf":"$sfShort","failed":$failedJson}"""
     }
     // 1750, not ~2000: when the driver's timeout kills the sbt wrapper,
     // sbt appends two ~55-char "[error] Nonzero exit code" lines AFTER
     // our last checkpoint — the line must fit the captured tail WITH
     // that trailing noise (measured in the r8 kill rehearsal).
-    // Last resort when the pinned keys alone overflow the window (e.g. a
-    // tpcds fragment lands on top of all 144 pins): drop the advisory
-    // mx/ov fields — they live in the detail sidecar — before ever
-    // letting the line exceed the tail budget.
+    // Last resort when the pinned keys alone overflow the window: drop
+    // the advisory mx/ov fields — they live in the detail sidecar —
+    // before ever letting the line exceed the tail budget.
     def fitLine(partial: Boolean): String =
       Seq(0.0, 0.1, 0.25, 0.5, 1.0).view.map(buildLine(_, partial))
         .find(_.length <= 1750)
@@ -363,15 +367,13 @@ object Bench {
 
     // ---- detail sidecar ----------------------------------------------
     // FULL detail — every number the compact tail cannot carry (full
-    // query names, min/median/mean/max/n/cpu_frac, bytes + cost,
-    // per-iteration curation cells, tpcds failure names, overhead probe
-    // times). Written via temp file + ATOMIC_MOVE and length-asserted,
-    // REWRITTEN after every completed section, so even a killed bench
-    // leaves a valid sidecar carrying everything finished so far.
+    // query names, min/median/mean/max/n/cpu_frac, bytes + cost, the
+    // mor_tax curve, overhead probe times). Written via temp file +
+    // ATOMIC_MOVE and length-asserted, REWRITTEN after every completed
+    // section, so even a killed bench leaves a valid sidecar carrying
+    // everything finished so far.
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
       "bench_detail.json")
-    var tpcdsFailedDetail = Map.empty[String, Seq[String]]
-    var curationDetail = ""
     var morTaxNow = "{}"
     var ovhNow = (0.0, 0.0)
     var ovhLateNow = (0.0, 0.0)
@@ -383,11 +385,7 @@ object Bench {
           f""""input":${st.input},"shuffle":${st.shuffle},"cpu_sec":${st.cpuSec}%.3f,""" +
           f""""est_cost_usd":${estCost(st)}%.6f}"""
       }.mkString("{", ",", "}")
-      val tf = tpcdsFailedDetail.map { case (k, names) =>
-        "\"" + k + "\":" + names.map("\"" + _ + "\"").mkString("[", ",", "]")
-      }.mkString("{", ",", "}")
-      val cd = if (curationDetail.isEmpty) "{}" else curationDetail
-      val payload = (s"""{"queries":$sidecarStats,"tpcds_failed":$tf,"curation":$cd,""" +
+      val payload = (s"""{"queries":$sidecarStats,""" +
         s""""mor_tax":$morTaxNow,""" +
         f""""overhead":{"raw_s":${ovhNow._1}%.3f,"graft_s":${ovhNow._2}%.3f},""" +
         f""""overhead_late":{"raw_s":${ovhLateNow._1}%.3f,"graft_s":${ovhLateNow._2}%.3f},""" +
@@ -504,12 +502,9 @@ object Bench {
     // ---- sections, in priority order, each budget-gated --------------
     // Clean-box second estimates; a section runs only when
     // est × pace × 1.2 + 90 s of final-write margin fits the remaining
-    // budget. Order encodes what the record must carry first — the
-    // reference's own evaluation priority (docs/README.md: curation is
-    // the primary axis, the query corpus the secondary): the snapshot-
-    // layer overhead probe, the curation sf1 grid (slim fallback when
-    // tight), the literal corpus at sf1 (partially sheddable), the MoR
-    // read tax, the remaining curation scales, then the bigger decades.
+    // budget. Order encodes what the record must carry first: the
+    // snapshot-layer overhead probe, the MoR read tax, then the overhead
+    // probe again on the aged session.
     def section(name: String, estCleanS: Double)(body: => Unit): Unit = {
       val need = estCleanS * slow * 1.2 + 90
       val rem = remainingS()
@@ -525,12 +520,6 @@ object Bench {
       }
       checkpoint()
     }
-    // A section whose input is absent says so in the progress log rather
-    // than finishing silently as "done in 0 s".
-    def inputFound(name: String, path: String): Boolean =
-      java.nio.file.Files.exists(java.nio.file.Paths.get(path)) || {
-        progress(s"$name SKIPPED: missing $path"); false
-      }
 
     // Snapshot-layer overhead vs raw parquet (BASELINE.md "Our BENCH
     // target": the snapshot layer should cost ≤~20% over raw Parquet
@@ -540,7 +529,7 @@ object Bench {
     // DSv2 scan path. The probe aggregates a non-pushable SUM so the
     // metadata-aggregate shortcut cannot fake the graft side. Runs
     // right after the headline queries, so it measures the layer; the
-    // same probe re-runs post-curation into overhead_late (session-age
+    // same probe re-runs after mor_tax into overhead_late (session-age
     // entropy tracking — see SURVEY §6).
     def runOverheadProbe(): (Double, Double) = try {
       val li = s"$sfDir/lineitem.parquet"
@@ -569,122 +558,6 @@ object Bench {
       ovhNow = runOverheadProbe()
       overheadJsonRef.set(if (ovhNow._1 <= 0) ""
         else f""","ovh":${ovhNow._2 / ovhNow._1}%.2f""")
-    }
-
-    // Curation-axis sections (the reference's PRIMARY evaluation —
-    // BASELINE.md curation tables; reference/docs/README.md:90-104):
-    // bulk insert + SCD2 merges at update proportions 0.001-0.99 over
-    // store_sales-shaped data, the skewed-CDC cell, and the bigger
-    // scales' MoR/CoW blocks. Split in TWO: the FIRST spec'd scale
-    // (sf1) runs BEFORE the tpcds decade — r8 inverted this priority
-    // and a 1.9x-slow box spent the window on tpcds (the reference's
-    // SECONDARY axis) then shed curation entirely from the driver
-    // artifact — and the remaining scales run after mor_tax, each
-    // self-gating on the pace-normalized budget. Both calls fold into
-    // ONE merged "cur" fragment via runAll's `prior` carry.
-    val curationData = sys.env.getOrElse("SPARK_GRAFT_CURATION_DATA",
-      "target/tpcds-sf1/store_sales.parquet")
-    val curationScales = graft.tools.CurationBench.parseScales(
-      sys.env.getOrElse("SPARK_GRAFT_CURATION_SCALES",
-        "sf1:1,sf10:10,sf100:100:morcow"))
-    val cIters = sys.env.getOrElse("SPARK_GRAFT_CURATION_ITERS", "2").toInt
-    val curationOn = !sys.env.contains("SPARK_GRAFT_SKIP_CURATION")
-    var curationDone =
-      Seq.empty[(String, Double, Seq[graft.tools.CurationBench.Cell])]
-    def runCuration(scales: Seq[(String, Int, Boolean, Seq[Double])],
-        props: Seq[Double], it: Int): Unit = {
-      val (compact, detail, ds) = graft.tools.CurationBench.runAll(
-        spark, curationData, scales, props,
-        m => progress(s"[curation] $m"), iters = it,
-        // normalize the remaining wall budget to clean-box seconds,
-        // minus the final-write margin
-        remainingS = () => (remainingS() - 90) / slow,
-        onPartial = (pc, pd) => {
-          curationDetail = pd
-          curationJsonRef.set("," + "\"cur\":" + pc)
-          checkpoint()
-        },
-        prior = curationDone)
-      if (ds.nonEmpty) {
-        curationDone = ds
-        curationDetail = detail
-        curationJsonRef.set("," + "\"cur\":" + compact)
-      }
-    }
-    // Gate on the SLIM grid's cost (n=1, proportions {0.01, 0.99}) and
-    // decide full-vs-slim INSIDE: at pace ~2x the full sf1 grid no
-    // longer fits the window after the headline, and a 2-point curve in
-    // the driver artifact beats the r8 hole.
-    section("curation", estCleanS = 175) {
-      if (curationOn && curationScales.nonEmpty &&
-          inputFound("curation", curationData)) {
-        val fullNeed = 240 * slow * 1.2 + 90
-        if (remainingS() >= fullNeed)
-          runCuration(curationScales.take(1), Seq(0.001, 0.01, 0.1, 0.99), cIters)
-        else {
-          progress(f"curation SLIM mode (n=1, p={0.01,0.99}): " +
-            f"${remainingS()}%.0f s left < $fullNeed%.0f s for the full sf1 grid")
-          runCuration(curationScales.take(1), Seq(0.01, 0.99), 1)
-        }
-      }
-    }
-
-    // TPC-DS corpus sections: the reference's literal 98 queries, timed
-    // in THIS artifact (one timed pass each — the decade sum IS the
-    // iteration). Key legend: n=queries ok, t=sum sec, m=median sec,
-    // w=wall incl ingest, f=failed count (names in the detail file),
-    // sk=queries NOT attempted (present only when the budget truncated
-    // the decade — runCorpus sheds PARTIALLY, so a slow box leaves a
-    // prefix record instead of the r8 all-or-nothing SKIP; the section
-    // est below is therefore the minimum worth starting — ingest plus a
-    // dozen queries — not the full-decade cost). `reserveS` holds back
-    // wall budget for the sections that must still run after this one.
-    def tpcdsSection(key: String, dirEnv: String, defaultDir: String,
-        skipEnv: String, reserveS: Double): Unit = {
-      val dirName = sys.env.getOrElse(dirEnv, defaultDir)
-      val dir = java.nio.file.Paths.get(dirName)
-      if (sys.env.contains(skipEnv) || !inputFound(key, dirName)) ()
-      else try {
-        val base = tpcdsJsonRef.get
-        val t0 = System.nanoTime()
-        def frag(ts: Seq[(String, Double)], fl: List[String],
-            skipped: Int): String = {
-          val tOk = ts.filterNot { case (n, _) => fl.contains(n) }
-          val secs = tOk.map(_._2).sorted
-          val med = if (secs.isEmpty) 0.0
-            else if (secs.size % 2 == 1) secs(secs.size / 2)
-            else (secs(secs.size / 2 - 1) + secs(secs.size / 2)) / 2
-          f""","$key":{"n":${tOk.size},"t":${secs.sum}%.1f,"m":$med%.2f,""" +
-            f""""w":${(System.nanoTime() - t0) / 1e9}%.0f,"f":${fl.size}""" +
-            (if (skipped > 0) s""","sk":$skipped}""" else "}")
-        }
-        val (times, tFailed, skipped) = graft.tools.TpcdsTime.runCorpus(
-          spark, dir, iters = 1, warmup = false,
-          log = m => progress(s"[$key] $m"),
-          remainingS = () => remainingS() - reserveS,
-          onCheckpoint = (ts, fl, sk) => {
-            tpcdsFailedDetail += key -> fl
-            tpcdsJsonRef.set(base + frag(ts, fl, sk))
-            checkpoint()
-          })
-        tpcdsFailedDetail += key -> tFailed
-        tpcdsJsonRef.set(base + frag(times, tFailed, skipped))
-        if (skipped > 0)
-          progress(s"$key truncated: $skipped queries unattempted")
-      } catch { case e: Throwable =>
-        progress(s"$key section failed: ${e.getMessage}")
-      }
-    }
-    // Min-entry estimates = the PARTITIONED INGEST's clean-box cost
-    // (r8 driver log: sf1 ingest alone was 387 s at pace 2.13, ~180 s
-    // clean) plus a first bite of queries — a section that can only
-    // afford its ingest must not start. Reserve the mor_tax section's
-    // cost while the sf1 decade runs — the read-tax curve is small,
-    // load-bearing, and must not be starved by a truncating decade on
-    // a slow box.
-    section("tpcds", estCleanS = 210) {
-      tpcdsSection("tpcds", "SPARK_GRAFT_TPCDS_DIR", "target/tpcds-sf1",
-        "SPARK_GRAFT_SKIP_TPCDS", reserveS = 150 * slow * 1.2 + 90)
     }
 
     // MoR read-tax curve (the number a CDC user asks first): SELECT cost
@@ -743,33 +616,13 @@ object Bench {
       }
     }
 
-    // The remaining curation scales (sf10 grid, sf100 MoR/CoW block) —
-    // the primary axis's decades outrank the tpcds ones; each scale
-    // self-gates inside runAll on the pace-normalized budget.
-    section("curation2", estCleanS = 200) {
-      if (curationOn && curationScales.size > 1 &&
-          inputFound("curation2", curationData))
-        runCuration(curationScales.drop(1), Seq(0.001, 0.01, 0.1, 0.99), cIters)
-    }
-
-    section("tpcds10", estCleanS = 350) {
-      tpcdsSection("tpcds10", "SPARK_GRAFT_TPCDS_DIR10", "target/tpcds-sf10",
-        "SPARK_GRAFT_SKIP_TPCDS10", reserveS = 150)
-    }
-
-    // Second overhead probe at the OLD position (post-curation session
-    // age): r8 observed the GRAFT side alone degrade here while raw
-    // parquet stayed flat — session-age entropy in the DSv2 path, not
-    // scan-layer cost. Kept in the sidecar as overhead_late to track.
+    // Second overhead probe, after mor_tax has aged the session (its
+    // catalog, commits and compaction): r8 observed the GRAFT side alone
+    // degrade late in a run while raw parquet stayed flat — session-age
+    // entropy in the DSv2 path, not scan-layer cost. Kept in the sidecar
+    // as overhead_late to track.
     section("overhead_late", estCleanS = 15) {
       ovhLateNow = runOverheadProbe()
-    }
-
-    // Deferred stretch decade — strictly last, so the reference's
-    // primary axes can never be starved by it.
-    section("tpcds30", estCleanS = 600) {
-      tpcdsSection("tpcds30", "SPARK_GRAFT_TPCDS_DIR30", "target/tpcds-sf30",
-        "SPARK_GRAFT_SKIP_TPCDS30", reserveS = 90)
     }
 
     val line = fitLine(partial = false)

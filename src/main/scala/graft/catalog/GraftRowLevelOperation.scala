@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.graft.StoreWrite
 import org.apache.spark.sql.sources._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Group-based (file-level copy-on-write) row-level operation for SQL
@@ -68,21 +68,28 @@ class GraftRowLevelOperation(spark: SparkSession, catalogName: String,
       override def build(): Scan = new GraftCowScan
     }
 
-  private def parquetScanOver(files: Seq[FileEntry]): Scan = {
+  /** Full-width parquet scan over `files`; with `rowIdx` the parquet
+    * row-index temporary column is appended to the read schema, which the
+    * positional-delete path of [[org.apache.spark.sql.graft.MorScan]]
+    * reads its masks against. */
+  private def parquetScanOver(files: Seq[FileEntry], rowIdx: Boolean = false): Scan = {
     // Manifest-backed index: no filesystem listing at plan time (see
     // [[org.apache.spark.sql.graft.ManifestFileIndex]]).
     val root = new org.apache.hadoop.fs.Path(warehouse, tableName)
-    org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder(
+    val b = org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder(
       spark, new org.apache.spark.sql.graft.ManifestFileIndex(spark, root, files),
-      tableSchema, tableSchema, CaseInsensitiveStringMap.empty()).build()
+      tableSchema, tableSchema, CaseInsensitiveStringMap.empty())
+    if (rowIdx) b.pruneColumns(tableSchema.add(
+      ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType, nullable = true))
+    b.build()
   }
 
   /** The operation's source scan over `files`. On a merge-on-read snapshot
     * this is a [[org.apache.spark.sql.graft.GraftMorScan]] — the rewrite
-    * reads THROUGH the equality deletes, so masked rows are never copied
-    * into the replacement files (a raw scan would resurrect them). The
-    * commit then carries only the delete files that still mask a kept
-    * file; an unfiltered rewrite shears the whole MoR overlay off. */
+    * reads THROUGH the equality and positional deletes, so masked rows are
+    * never copied into the replacement files (a raw scan would resurrect
+    * them). The commit then carries only the delete files that still mask
+    * a kept file; an unfiltered rewrite shears the whole MoR overlay off. */
   private def scanOverFiles(files: Seq[FileEntry]): Scan =
     if (manifest.deleteFiles.isEmpty) parquetScanOver(files)
     else {
@@ -90,7 +97,8 @@ class GraftRowLevelOperation(spark: SparkSession, catalogName: String,
       // parquetScanOver pushes no filters, so it is valid for both roles
       org.apache.spark.sql.graft.MorScan.buildScan(spark, root,
         s"$tableName rowlevel", manifest, tableSchema, tableSchema, files,
-        fes => parquetScanOver(fes), fes => parquetScanOver(fes), 4000000L)
+        fes => parquetScanOver(fes), fes => parquetScanOver(fes, rowIdx = true),
+        4000000L)
     }
 
   /** The operation's scan, with MERGE-time runtime group filtering: for a

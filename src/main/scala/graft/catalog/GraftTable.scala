@@ -78,9 +78,10 @@ class GraftTable(spark: SparkSession, catalogName: String, warehouse: String,
   override def newRowLevelOperationBuilder(
       info: RowLevelOperationInfo): RowLevelOperationBuilder =
     // On a merge-on-read snapshot the operation's scan reads THROUGH the
-    // equality deletes (GraftRowLevelOperation.scanOverFiles), so the
-    // copy-on-write rewrite materializes them instead of resurrecting
-    // dead rows; the commit drops every delete file the rewrite made dead.
+    // equality and positional deletes (GraftRowLevelOperation
+    // .scanOverFiles), so the copy-on-write rewrite materializes them
+    // instead of resurrecting dead rows; the commit drops every delete
+    // file the rewrite made dead.
     () => new GraftRowLevelOperation(spark, catalogName, warehouse, tableName,
       info.command())
 }

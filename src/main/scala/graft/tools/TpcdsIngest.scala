@@ -1,6 +1,6 @@
 package graft.tools
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 
 import scala.jdk.CollectionConverters._
 
@@ -9,12 +9,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Shared TPC-DS corpus ingest: loads every dsdgen parquet table into a
-  * TableStore, partitioning the 7 fact tables exactly as the reference's
-  * benchmark metadata declares (reference/src/data_derivation/
-  * query_performance/utils/metadata/&lt;table&gt;.json `"partitions"` — the
-  * spec the sf3000 Athena/Hive runs used,
-  * utils/create_partitioned_hive_tpcds.py:49-105: each fact table on its
-  * date surrogate key).
+  * TableStore, partitioning the 7 fact tables on their date surrogate key
+  * as the reference's benchmark metadata declares (SURVEY §1.3 — the spec
+  * the sf3000 Athena/Hive runs used).
   *
   * Fact rows are clustered on the partition column before the write
   * (`repartition(dateSk)`) so each date partition lands as ONE file
@@ -24,21 +21,17 @@ import org.apache.spark.sql.functions.col
   * pruning. */
 object TpcdsIngest {
 
-  private val metadataDir = Paths.get(
-    "/root/reference/src/data_derivation/query_performance/utils/metadata")
+  private val factPartitions = Map(
+    "store_sales" -> "ss_sold_date_sk",
+    "store_returns" -> "sr_returned_date_sk",
+    "catalog_sales" -> "cs_sold_date_sk",
+    "catalog_returns" -> "cr_returned_date_sk",
+    "web_sales" -> "ws_sold_date_sk",
+    "web_returns" -> "wr_returned_date_sk",
+    "inventory" -> "inv_date_sk")
 
-  /** table → the reference's declared partition columns (empty = none). */
-  def partitionsOf(table: String): Seq[String] = {
-    val f = metadataDir.resolve(s"$table.json")
-    if (!Files.isRegularFile(f)) Seq.empty
-    else {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(Files.readAllBytes(f))
-      val p = node.get("partitions")
-      if (p == null) Seq.empty
-      else p.elements().asScala.map(_.asText()).toSeq
-    }
-  }
+  /** table → its partition columns (empty for the dimension tables). */
+  def partitionsOf(table: String): Seq[String] = factPartitions.get(table).toSeq
 
   /** Depth-first delete. `Files.list` streams are CLOSED per directory —
     * the stream holds the directory fd, and an unclosed recursive walk
@@ -53,18 +46,15 @@ object TpcdsIngest {
     ()
   }
 
-  /** Ingest every `*.parquet` table under `dataDir`. With `partitioned`
-    * (the reference's benchmark layout) the 7 fact tables go through
-    * `commitPartitioned` on their declared date sk. */
-  def ingest(spark: SparkSession, store: TableStore, dataDir: Path,
-      partitioned: Boolean = true, log: String => Unit = _ => ()): Unit =
+  /** Ingest every `*.parquet` table under `dataDir`; the 7 fact tables go
+    * through `commitPartitioned` on their date sk. */
+  def ingest(spark: SparkSession, store: TableStore, dataDir: Path): Unit =
     Files.list(dataDir).iterator().asScala
       .filter(_.toString.endsWith(".parquet")).toSeq.sortBy(_.toString)
       .foreach { p =>
         val name = p.getFileName.toString.stripSuffix(".parquet")
         val df = spark.read.parquet(p.toString)
-        val pcols = if (partitioned) partitionsOf(name) else Seq.empty
-        val t0 = System.nanoTime()
+        val pcols = partitionsOf(name)
         // Explicit partition count: a plain repartition(cols) lets AQE
         // coalesce the tiny shuffle to ONE task, which then writes every
         // partition directory sequentially (measured 21 s vs 6 s for
@@ -73,7 +63,5 @@ object TpcdsIngest {
         if (pcols.isEmpty) store.commit(name, df, "ctas")
         else store.commitPartitioned(name,
           df.repartition(par, pcols.map(col): _*), pcols, "ctas")
-        log(f"ingested $name in ${(System.nanoTime() - t0) / 1e9}%.1f s" +
-          (if (pcols.nonEmpty) s" (partitioned by ${pcols.mkString(",")})" else ""))
       }
 }

@@ -6,18 +6,19 @@ import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 import graft.core.TableStore
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Row, SparkSession}
 
-/** EXECUTES the reference's literal TPC-DS corpus — all 98 SQL files from
-  * reference/src/data_derivation/query_performance/sql — through GraftCatalog
-  * against dsdgen sf0.01 data, and compares every result set against a
-  * DuckDB oracle computed from the same parquet inputs
-  * (fixtures/tpcds-sf0.01, generated by tools/gen_tpcds.py).
+/** EXECUTES the TPC-DS query corpus through GraftCatalog against dsdgen
+  * sf0.01 data (fixtures/tpcds-sf0.01, generated by tools/gen_tpcds.py)
+  * and compares every result set against a DuckDB oracle computed from the
+  * same parquet inputs.
   *
-  * This is the strongest end-to-end claim in the suite: a user of the
-  * reference could point their existing query texts at this engine and get
-  * the reference's answers. [[TpcdsPlanSpec]] proves the corpus *plans*;
-  * this proves it *runs and is right* (at a small scale factor).
+  * The corpus lives in the checkout: DuckDB's 99 texts, with DuckDB's own
+  * parameters, in `queries/`, and their answers in `expected-duckdb/`
+  * (tools/gen_tpcds_expected.py --duckdb-texts). When the reference's own
+  * 98 texts are present, they run through the same loop against the
+  * committed `expected/` answers. [[TpcdsPlanSpec]] proves the corpus
+  * *plans*; this proves it *runs and is right* (at a small scale factor).
   *
   * Comparison is positional and order-insensitive (the corpus' ORDER BY is
   * part of the texts, but engines may break ties differently), with a
@@ -25,29 +26,9 @@ import org.apache.spark.sql.Row
   * DuckDB's double aggregates round differently.
   */
 class TpcdsExecSpec extends SparkSpec {
+  import TpcdsExecSpec._
 
-  // Overridable so the same gate can run against larger dsdgen dirs
-  // (tools/gen_tpcds.py output), e.g. GRAFT_TPCDS_DIR=target/tpcds-sf1.
-  private val dataDir = Paths.get(
-    sys.env.getOrElse("GRAFT_TPCDS_DIR", "fixtures/tpcds-sf0.01"))
-  private val sqlDir =
-    Paths.get("/root/reference/src/data_derivation/query_performance/sql")
   private val cat = "graftds_exec"
-
-  private def parquetsIn(dir: Path): Seq[Path] =
-    Files.list(dir).iterator().asScala
-      .filter(_.toString.endsWith(".parquet")).toSeq.sortBy(_.toString)
-
-  /** One-time ingest of the 24 dsdgen tables into a TableStore warehouse —
-    * fact tables partitioned on their date sk per the reference's declared
-    * benchmark metadata (TpcdsIngest), so the 98-query gate runs against
-    * the layout the reference actually benchmarked. */
-  private lazy val warehouse: String = {
-    val wh = tmpDir("tpcds-exec")
-    val store = new TableStore(spark, wh)
-    graft.tools.TpcdsIngest.ingest(spark, store, dataDir)
-    wh
-  }
 
   private def asNum(v: Any): Option[BigDecimal] = v match {
     case b: java.lang.Byte => Some(BigDecimal(b.intValue))
@@ -107,50 +88,92 @@ class TpcdsExecSpec extends SparkSpec {
     }
   }
 
-  test("all 98 reference TPC-DS queries execute and match the DuckDB oracle") {
-    assume(Files.isDirectory(dataDir) && Files.isDirectory(sqlDir))
-    warehouse // force ingest
-    spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", warehouse)
-    spark.sql(s"USE $cat")
-    // the corpus is Athena-ANSI: "double quoted" column aliases
-    spark.conf.set("spark.sql.ansi.enabled", "true")
-    spark.conf.set("spark.sql.ansi.doubleQuotedIdentifiers", "true")
-    try {
-      val results = parquetsIn(dataDir.resolve("expected")).map { exp =>
-        val name = exp.getFileName.toString.stripSuffix(".parquet")
-        val text = new String(
-          Files.readAllBytes(sqlDir.resolve(s"$name.sql")), "UTF-8")
-        try {
-          val got =
-            try spark.sql(text).collect()
-            catch {
-              // q90's am/pm ratio divides by a count that is zero only at
-              // this tiny SF (non-zero at the reference's sf100+). ANSI
-              // (like Athena) errors; the DuckDB oracle yields NULL — rerun
-              // just this text with ANSI off to compare the NULL semantics.
-              case e: Throwable
-                  if Option(e.getMessage).exists(_.contains("DIVIDE_BY_ZERO")) =>
-                spark.conf.set("spark.sql.ansi.enabled", "false")
-                try spark.sql(text).collect()
-                finally spark.conf.set("spark.sql.ansi.enabled", "true")
-            }
-          val want = spark.read.parquet(exp.toString).collect()
-          name -> compare(got, want)
-        } catch {
-          case e: Throwable =>
-            name -> Some("EXEC: " + Option(e.getMessage).getOrElse(e.toString)
-              .linesIterator.take(2).mkString(" ").take(300))
+  corpora.foreach { c =>
+    test(s"all ${c.size} ${c.label} TPC-DS queries execute and match the DuckDB oracle") {
+      val names = c.names
+      assert(names.size == c.size, s"expected ${c.size} ${c.label} texts, got ${names.size}")
+      val results = inCorpusSession(spark, cat, warehouse) {
+        names.map { name =>
+          val text = c.text(name)
+          try {
+            val got =
+              try spark.sql(text).collect()
+              catch {
+                // q90's am/pm ratio divides by a count that is zero only at
+                // this tiny SF (non-zero at the reference's sf100+). ANSI
+                // (like Athena) errors; the DuckDB oracle yields NULL — rerun
+                // just this text with ANSI off to compare the NULL semantics.
+                case e: Throwable
+                    if Option(e.getMessage).exists(_.contains("DIVIDE_BY_ZERO")) =>
+                  graft.GraftSession.withConf(spark, "spark.sql.ansi.enabled" -> "false") {
+                    spark.sql(text).collect()
+                  }
+              }
+            val want = spark.read.parquet(c.answer(name).toString).collect()
+            name -> compare(got, want)
+          } catch {
+            case e: Throwable =>
+              name -> Some("EXEC: " + Option(e.getMessage).getOrElse(e.toString)
+                .linesIterator.take(2).mkString(" ").take(300))
+          }
         }
       }
-      assert(results.size == 98, s"expected 98 oracle results, got ${results.size}")
       val failures = results.collect { case (n, Some(why)) => s"$n: $why" }
       assert(failures.isEmpty,
-        s"${failures.size}/98 mismatched:\n${failures.mkString("\n")}")
-    } finally {
-      spark.conf.set("spark.sql.ansi.enabled", "false")
-      spark.conf.set("spark.sql.ansi.doubleQuotedIdentifiers", "false")
-      spark.sql("USE spark_catalog")
+        s"${failures.size}/${c.size} mismatched:\n${failures.mkString("\n")}")
     }
   }
+}
+
+object TpcdsExecSpec {
+
+  // Overridable so the same gates can run against larger dsdgen dirs
+  // (tools/gen_tpcds.py + gen_tpcds_expected.py output).
+  val dataDir: Path = Paths.get(
+    sys.env.getOrElse("GRAFT_TPCDS_DIR", "fixtures/tpcds-sf0.01"))
+  // the reference's own texts, from its checkout beside this one
+  private val referenceSqlDir =
+    Paths.get("..", "reference", "src", "data_derivation", "query_performance", "sql")
+
+  /** A (texts, answers) pair: `qNN.sql` files and their `qNN.parquet`
+    * oracle answers. */
+  final case class Corpus(label: String, sqlDir: Path, answerDir: Path, size: Int) {
+    def names: Seq[String] = Files.list(sqlDir).iterator().asScala
+      .map(_.getFileName.toString).filter(_.matches("q.*\\.sql"))
+      .map(_.stripSuffix(".sql")).toSeq.sorted
+    def text(name: String): String =
+      new String(Files.readAllBytes(sqlDir.resolve(s"$name.sql")), "UTF-8")
+    def answer(name: String): Path = answerDir.resolve(s"$name.parquet")
+  }
+
+  /** One ingest of the 24 dsdgen tables into a TableStore warehouse,
+    * shared by the corpus specs — fact tables partitioned on their date sk
+    * (TpcdsIngest), so the corpus runs against the layout the reference
+    * benchmarked. */
+  lazy val warehouse: String = {
+    val wh = Files.createTempDirectory("tpcds-exec").toString
+    val spark = graft.SparkSpec.session
+    graft.tools.TpcdsIngest.ingest(spark, new TableStore(spark, wh), dataDir)
+    wh
+  }
+
+  /** The checkout corpus always — a missing one fails its test — and the
+    * reference's texts with their committed answers when present. */
+  val corpora: Seq[Corpus] =
+    Corpus("DuckDB", dataDir.resolve("queries"), dataDir.resolve("expected-duckdb"), 99) +:
+      Seq(Corpus("reference", referenceSqlDir, dataDir.resolve("expected"), 98))
+        .filter(c => Files.isDirectory(c.sqlDir))
+
+  /** Run `body` with `warehouse` mounted as catalog `cat` and current, in
+    * the corpus' ANSI dialect: "double quoted" identifiers alias columns
+    * in both corpora. */
+  def inCorpusSession[T](spark: SparkSession, cat: String, warehouse: String)(body: => T): T =
+    graft.GraftSession.withConf(spark,
+      s"spark.sql.catalog.$cat" -> classOf[GraftCatalog].getName,
+      s"spark.sql.catalog.$cat.warehouse" -> warehouse,
+      "spark.sql.ansi.enabled" -> "true",
+      "spark.sql.ansi.doubleQuotedIdentifiers" -> "true") {
+      spark.sql(s"USE $cat")
+      try body finally spark.sql("USE spark_catalog")
+    }
 }

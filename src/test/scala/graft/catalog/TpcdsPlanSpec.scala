@@ -1,92 +1,53 @@
 package graft.catalog
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 import graft.core.TableStore
-import org.apache.spark.sql.types._
 
-/** Plan smoke over the reference's OWN workload: the 24 TPC-DS table
-  * schemas (query_performance/utils/metadata JSONs, incl. their identity
-  * partition specs) are created as empty GraftCatalog tables, and every
-  * reference SQL file (query_performance/sql, 98 queries) must parse,
-  * resolve and optimize against them — this catches parser/analyzer/
-  * resolution gaps that the fixture-shaped gate queries cannot (the
-  * driver fixtures are TPC-H-ish, so the literal corpus can't EXECUTE
-  * here, but the whole SQL surface must at least plan). */
+/** Plan smoke over the TPC-DS workload: the 24 table schemas (read from
+  * the fixture parquet footers, with [[graft.tools.TpcdsIngest]]'s
+  * identity partition specs) are created as empty GraftCatalog tables, and
+  * every corpus text must parse, resolve and optimize against them — this
+  * catches parser/analyzer/resolution gaps without paying for execution
+  * ([[TpcdsExecSpec]] runs the texts). */
 class TpcdsPlanSpec extends SparkSpec {
+  import TpcdsExecSpec._
 
-  private val metaDir =
-    "/root/reference/src/data_derivation/query_performance/utils/metadata"
-  private val sqlDir =
-    "/root/reference/src/data_derivation/query_performance/sql"
-
-  private def sparkType(t: String): DataType = t match {
-    case "int64" => LongType
-    case "int32" => IntegerType
-    case "string" => StringType
-    case "date64" => DateType
-    case s if s.startsWith("timestamp") => TimestampType
-    case s if s.startsWith("decimal128(") =>
-      val Array(p, sc) = s.stripPrefix("decimal128(").stripSuffix(")").split(",")
-      DecimalType(p.trim.toInt, sc.trim.toInt)
-    case other => fail(s"unmapped metadata type: $other")
-  }
-
-  test("all reference TPC-DS queries plan against GraftCatalog schemas") {
-    assume(Files.isDirectory(Paths.get(metaDir)) && Files.isDirectory(Paths.get(sqlDir)))
+  private lazy val warehouse: String = {
     val wh = tmpDir("tpcds")
     val store = new TableStore(spark, wh)
-    val cat = "graftds"
-    spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val metaFiles = Files.list(Paths.get(metaDir)).iterator().asScala
-      .filter(_.toString.endsWith(".json")).toSeq.sortBy(_.toString)
-    assert(metaFiles.size == 24, s"expected 24 table schemas, got ${metaFiles.size}")
-    metaFiles.foreach { p =>
-      val n = mapper.readTree(Files.readAllBytes(p))
-      val name = n.get("name").asText()
-      val fields = n.get("columns").elements().asScala.map { c =>
-        StructField(c.get("name").asText(), sparkType(c.get("type").asText()))
-      }.toSeq
-      val parts = Option(n.get("partitions")).map(_.elements().asScala
-        .map(_.asText()).toSeq).getOrElse(Seq.empty)
-      store.createEmpty(name, StructType(fields).json, parts)
+    val tables = Files.list(dataDir).iterator().asScala
+      .map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSeq.sorted
+    assert(tables.size == 24, s"expected 24 table schemas, got ${tables.size}")
+    tables.foreach { f =>
+      val name = f.stripSuffix(".parquet")
+      val schema = spark.read.parquet(dataDir.resolve(f).toString).schema
+      store.createEmpty(name, schema.json, graft.tools.TpcdsIngest.partitionsOf(name))
     }
+    wh
+  }
 
-    val sqlFiles = Files.list(Paths.get(sqlDir)).iterator().asScala
-      .filter(_.getFileName.toString.matches("q.*\\.sql")).toSeq
-      .sortBy(_.getFileName.toString)
-    assert(sqlFiles.size == 98, s"expected 98 query files, got ${sqlFiles.size}")
-
-    spark.sql(s"USE $cat")
-    // the corpus is written in Athena's ANSI dialect: "double quoted"
-    // identifiers (q16/q32/q50/q62/q92/q94/q95/q99 alias columns that way)
-    spark.conf.set("spark.sql.ansi.enabled", "true")
-    spark.conf.set("spark.sql.ansi.doubleQuotedIdentifiers", "true")
-    try {
-      val failures = sqlFiles.flatMap { p =>
-        val text = new String(Files.readAllBytes(p), "UTF-8")
-        try {
-          // analyze + optimize (no execution: the tables are empty and the
-          // corpus is the reference's, not ours)
-          spark.sql(text).queryExecution.optimizedPlan
-          None
-        } catch {
-          case e: Throwable =>
-            Some(s"${p.getFileName}: ${Option(e.getMessage).getOrElse(e.toString).linesIterator.take(2).mkString(" ").take(300)}")
+  corpora.foreach { c =>
+    test(s"all ${c.size} ${c.label} TPC-DS queries plan against GraftCatalog schemas") {
+      val names = c.names
+      assert(names.size == c.size, s"expected ${c.size} ${c.label} texts, got ${names.size}")
+      val failures = inCorpusSession(spark, "graftds", warehouse) {
+        names.flatMap { name =>
+          try {
+            // analyze + optimize only: the tables are empty
+            spark.sql(c.text(name)).queryExecution.optimizedPlan
+            None
+          } catch {
+            case e: Throwable =>
+              Some(s"$name: ${Option(e.getMessage).getOrElse(e.toString).linesIterator.take(2).mkString(" ").take(300)}")
+          }
         }
       }
       assert(failures.isEmpty,
-        s"${failures.size}/98 failed to plan:\n${failures.mkString("\n")}")
-    } finally {
-      spark.conf.set("spark.sql.ansi.enabled", "false")
-      spark.conf.set("spark.sql.ansi.doubleQuotedIdentifiers", "false")
-      spark.sql("USE spark_catalog")
+        s"${failures.size}/${c.size} failed to plan:\n${failures.mkString("\n")}")
     }
   }
 }

@@ -1,24 +1,18 @@
 package graft.catalog
 
-import java.nio.file.{Files, Paths}
-
 import graft.SparkSpec
 import graft.core.TableStore
 
-/** Proves runtime file pruning fires on the reference's OWN workload in
-  * its OWN layout: the fact tables are ingested partitioned on their
-  * metadata-declared date sk (graft.tools.TpcdsIngest — the layout the
-  * sf3000 benchmark ran, docs/README.md:326-329) and the literal corpus
-  * q42/q52/q55 texts (date_dim star joins with d_moy/d_year filters) must scan
-  * strictly fewer store_sales files than the snapshot holds: the
-  * dimension filter reaches the fact scan as a runtime IN-list and drops
-  * date partitions no surviving d_date_sk can touch. */
+/** Proves runtime file pruning fires on the TPC-DS workload in the
+  * reference's layout: over [[TpcdsExecSpec]]'s warehouse, whose fact
+  * tables are partitioned on their date sk (graft.tools.TpcdsIngest — the
+  * layout the sf3000 benchmark ran), the corpus q42/q52/q55 texts
+  * (date_dim star joins with d_moy/d_year filters) must scan strictly
+  * fewer store_sales files than the snapshot holds: the dimension filter
+  * reaches the fact scan as a runtime IN-list and drops date partitions no
+  * surviving d_date_sk can touch. */
 class TpcdsPruneSpec extends SparkSpec {
-
-  private val dataDir = Paths.get(
-    sys.env.getOrElse("GRAFT_TPCDS_DIR", "fixtures/tpcds-sf0.01"))
-  private val sqlDir =
-    Paths.get("/root/reference/src/data_derivation/query_performance/sql")
+  import TpcdsExecSpec._
 
   private def graftScans(p: org.apache.spark.sql.execution.SparkPlan)
       : Seq[org.apache.spark.sql.graft.GraftStatsScan] = {
@@ -40,32 +34,14 @@ class TpcdsPruneSpec extends SparkSpec {
   }
 
   test("corpus q42/q52/q55 runtime-prune the partitioned store_sales scan") {
-    assume(Files.isDirectory(dataDir) && Files.isDirectory(sqlDir))
-    val wh = tmpDir("tpcds-prune")
-    val store = new TableStore(spark, wh)
-    // only the three tables the q3-shape queries touch
-    Seq("store_sales", "date_dim", "item").foreach { t =>
-      val df = spark.read.parquet(dataDir.resolve(s"$t.parquet").toString)
-      val pcols = graft.tools.TpcdsIngest.partitionsOf(t)
-      if (pcols.isEmpty) store.commit(t, df, "ctas")
-      else store.commitPartitioned(t,
-        df.repartition(pcols.map(org.apache.spark.sql.functions.col): _*),
-        pcols, "ctas")
-    }
-    val total = store.manifests("store_sales").maxBy(_.version).files.size
+    val total = new TableStore(spark, warehouse).manifests("store_sales")
+      .maxBy(_.version).files.size
     assert(total > 100, s"fixture should split into many date partitions, got $total")
 
-    val cat = "graftprune"
-    spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    spark.sql(s"USE $cat")
-    spark.conf.set("spark.sql.ansi.enabled", "true")
-    spark.conf.set("spark.sql.ansi.doubleQuotedIdentifiers", "true")
-    try {
+    val corpus = corpora.head
+    inCorpusSession(spark, "graftprune", warehouse) {
       Seq("q42", "q52", "q55").foreach { name =>
-        val text = new String(
-          Files.readAllBytes(sqlDir.resolve(s"$name.sql")), "UTF-8")
-        val df = spark.sql(text)
+        val df = spark.sql(corpus.text(name))
         df.collect()
         val kept = graftScans(df.queryExecution.executedPlan)
           .filter(_.table == "store_sales")
@@ -77,10 +53,6 @@ class TpcdsPruneSpec extends SparkSpec {
         assert(kept <= total / 6,
           s"$name: pruning too weak, scanned $kept/$total files")
       }
-    } finally {
-      spark.conf.set("spark.sql.ansi.enabled", "false")
-      spark.conf.set("spark.sql.ansi.doubleQuotedIdentifiers", "false")
-      spark.sql("USE spark_catalog")
     }
   }
 }

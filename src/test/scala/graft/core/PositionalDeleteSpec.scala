@@ -286,4 +286,46 @@ class PositionalDeleteSpec extends SparkSpec {
       assert(partitions(df) > files.size)
     }
   }
+
+  /** Two data files, each with a positionally deleted row (ids 3 and 8),
+    * mounted in a fresh catalog: the store, the table's SQL name and the
+    * version the deletes made. */
+  private def posDeletedTable(): (TableStore, String, Long) = {
+    val wh = tmpDir("pd_rowlevel")
+    val cat = s"gposrl${System.nanoTime()}"
+    spark.conf.set(s"spark.sql.catalog.$cat",
+      classOf[graft.catalog.GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    val store = new TableStore(spark, wh)
+    store.commit("t", (1L to 5L).map(i => (i, i * 1.0)).toDF("id", "v"), "create")
+    store.append("t", (6L to 10L).map(i => (i, i * 1.0)).toDF("id", "v"))
+    val v = store.deleteWhereMoR("t", "id IN (3, 8)")
+    (store, s"$cat.ns.t", v)
+  }
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Set[(Long, Double)] =
+    df.select("id", "v").as[(Long, Double)].collect().toSet
+
+  // (statement, its SQL over table t, its answer from the pre-statement rows)
+  Seq[(String, String => String, org.apache.spark.sql.DataFrame => Set[(Long, Double)])](
+    ("DELETE", t => s"DELETE FROM $t WHERE id = 5",
+      before => rowsOf(before.filter($"id" =!= 5))),
+    ("UPDATE", t => s"UPDATE $t SET v = v * 10 WHERE id = 5",
+      before => rowsOf(before.withColumn("v",
+        when($"id" === 5, $"v" * 10).otherwise($"v")))),
+    ("MERGE", t => s"""MERGE INTO $t AS tgt
+        USING (SELECT * FROM VALUES (5L, 50.0D), (11L, 11.0D) AS s(id, v)) AS src
+        ON tgt.id = src.id
+        WHEN MATCHED THEN UPDATE SET v = src.v
+        WHEN NOT MATCHED THEN INSERT *""",
+      before => rowsOf(before.filter($"id" =!= 5)) ++ Set((5L, 50.0), (11L, 11.0)))
+  ).foreach { case (stmt, sql, answer) =>
+    test(s"SQL $stmt over positional deletes rewrites through the masks") {
+      val (store, t, v) = posDeletedTable()
+      spark.sql(sql(t))
+      val want = answer(store.readVersion("t", v))
+      assert(rowsOf(store.read("t")) == want)
+      assert(rowsOf(spark.sql(s"SELECT * FROM $t")) == want)
+    }
+  }
 }

@@ -7,7 +7,9 @@ Uses DuckDB's bundled dsdgen to produce the 24 reference table schemas
 reference SQL file (query_performance/sql/q*.sql — the literal texts, not
 DuckDB's canonical parameterization) and stores each result as parquet.
 `TpcdsExecSpec` loads the tables through GraftCatalog, runs the same texts
-in Spark, and compares.
+in Spark, and compares. The corpus the specs always run, DuckDB's own 99
+texts with their answers, is written by
+`tools/gen_tpcds_expected.py --duckdb-texts <outdir>`.
 
 Usage: python3 tools/gen_tpcds.py [sf] [outdir]
 Writes <outdir>/<table>.parquet, <outdir>/expected/<q>.parquet,

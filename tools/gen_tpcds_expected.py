@@ -1,12 +1,24 @@
 #!/usr/bin/env python3
-"""Rebuild <dir>/expected/*.parquet + manifest.json for an ALREADY-exported
+"""Write DuckDB answers for the TPC-DS query corpus over an ALREADY-exported
 dsdgen table directory (tools/gen_tpcds.py output), without re-running
 dsdgen. DuckDB queries the table parquet through views, with a memory
 limit + spill directory so a big scale factor cannot OOM the box
 (observed: in-memory dsdgen sf30 + a concurrent Spark JVM = OOM kill at
 94 GB RSS).
 
-Usage: python3 tools/gen_tpcds_expected.py <dir> [memory_limit]
+Two corpora:
+
+  python3 tools/gen_tpcds_expected.py --duckdb-texts <dir> [memory_limit]
+      DuckDB's own 99 texts and parameters, from the installed `tpcds`
+      extension (`tpcds_queries()`, no network). Writes the texts to
+      <dir>/queries/qNN.sql and their answers to
+      <dir>/expected-duckdb/qNN.parquet. This is the corpus the TPC-DS
+      specs run from a checkout.
+
+  python3 tools/gen_tpcds_expected.py <dir> [memory_limit]
+      The reference's 98 texts (its query_performance/sql, when that
+      checkout is present), answered into <dir>/expected/*.parquet +
+      <dir>/manifest.json.
 """
 import glob
 import json
@@ -18,11 +30,16 @@ import duckdb
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from gen_tpcds import duck_dialect  # noqa: E402
 
-DIR = sys.argv[1]
-MEM = sys.argv[2] if len(sys.argv) > 2 else "60GB"
+args = sys.argv[1:]
+DUCKDB_TEXTS = args[:1] == ["--duckdb-texts"]
+if DUCKDB_TEXTS:
+    args = args[1:]
+if not args:
+    sys.exit(__doc__)
+DIR = args[0]
+MEM = args[1] if len(args) > 1 else "60GB"
 SQL = "/root/reference/src/data_derivation/query_performance/sql"
 
-os.makedirs(os.path.join(DIR, "expected"), exist_ok=True)
 con = duckdb.connect()
 con.execute(f"SET memory_limit='{MEM}'")
 con.execute("SET temp_directory='/tmp/duckdb_spill'")
@@ -39,13 +56,32 @@ for p in sorted(glob.glob(os.path.join(DIR, "*.parquet"))):
     con.execute(f"create {kind} {t} as select * from '{p}'")
     print(f"[expected] {kind} {t}", file=sys.stderr)
 
+
+def corpus():
+    """(name, text DuckDB runs) for every query of the chosen corpus."""
+    if DUCKDB_TEXTS:
+        con.execute("LOAD tpcds")
+        qdir = os.path.join(DIR, "queries")
+        os.makedirs(qdir, exist_ok=True)
+        for n, text in con.execute(
+                "SELECT query_nr, query FROM tpcds_queries() ORDER BY query_nr").fetchall():
+            name = f"q{n:02d}"
+            text = text.strip().rstrip(";").strip() + "\n"
+            with open(os.path.join(qdir, f"{name}.sql"), "w") as fh:
+                fh.write(text)
+            yield name, text
+    else:
+        for p in sorted(glob.glob(os.path.join(SQL, "q*.sql"))):
+            with open(p) as f:
+                yield os.path.basename(p)[:-4], duck_dialect(f.read())
+
+
+out = os.path.join(DIR, "expected-duckdb" if DUCKDB_TEXTS else "expected")
+os.makedirs(out, exist_ok=True)
 manifest = {}
-for p in sorted(glob.glob(os.path.join(SQL, "q*.sql"))):
-    name = os.path.basename(p)[:-4]
-    with open(p) as f:
-        text = f.read()
-    dst = os.path.join(DIR, "expected", f"{name}.parquet")
-    if os.path.exists(dst):  # restart-friendly
+for name, text in corpus():
+    dst = os.path.join(out, f"{name}.parquet")
+    if os.path.exists(dst) and not DUCKDB_TEXTS:  # restart-friendly
         # A file truncated by a killed COPY fails the count — fall
         # through to regeneration instead of aborting the whole rebuild.
         try:
@@ -60,7 +96,7 @@ for p in sorted(glob.glob(os.path.join(SQL, "q*.sql"))):
             os.remove(dst)
     try:
         con.execute(
-            f"copy ({duck_dialect(text).rstrip().rstrip(';')}) to '{dst}' (format parquet)")
+            f"copy ({text.rstrip().rstrip(';')}) to '{dst}' (format parquet)")
         rows = con.execute(f"select count(*) from '{dst}'").fetchone()[0]
         manifest[name] = {"status": "ok", "rows": rows}
         print(f"[expected] {name}: {rows} rows", file=sys.stderr)
@@ -70,5 +106,7 @@ for p in sorted(glob.glob(os.path.join(SQL, "q*.sql"))):
 
 ok = sum(1 for v in manifest.values() if v["status"] == "ok")
 print(f"[expected] {ok}/{len(manifest)} queries ran in duckdb", file=sys.stderr)
+if DUCKDB_TEXTS:
+    sys.exit(0 if ok == len(manifest) else 1)
 with open(os.path.join(DIR, "manifest.json"), "w") as f:
     json.dump(manifest, f, indent=1, sort_keys=True)
