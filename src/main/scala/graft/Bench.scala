@@ -125,32 +125,33 @@ object Bench {
       // high-water mark near one section's working set.
       .config("spark.cleaner.periodicGC.interval", "90s")
 
-  /** Best-effort janitor for scratch warehouses orphaned by KILLED runs
-    * (a SIGKILL skips every finally/shutdown hook): graft tools name all
-    * their temp dirs `graft_*` / `tpcds-*` under java.io.tmpdir, so any
-    * such dir untouched for 2+ hours is a leak from a dead JVM. Live
-    * runs are safe — the age guard far exceeds any single section, and
-    * concurrent fresh dirs are younger. (r7 lesson: ~40 GB of orphans
-    * from killed sessions ENOSPC'd the sf100 curation cell.) */
-  private def sweepStaleScratch(log: String => Unit): Unit = try {
-    val tmp = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir", "/tmp"))
-    val cutoff = System.currentTimeMillis() - 2L * 3600 * 1000
-    val it = java.nio.file.Files.list(tmp).iterator()
-    var freed = 0
-    while (it.hasNext) {
-      val p = it.next()
-      val nm = p.getFileName.toString
-      if ((nm.startsWith("graft_") || nm.startsWith("tpcds-") ||
-          nm.startsWith("blockmgr-") || nm.startsWith("spark-")) &&
-          java.nio.file.Files.isDirectory(p) &&
-          java.nio.file.Files.getLastModifiedTime(p).toMillis < cutoff) {
-        try { graft.tools.TpcdsIngest.deleteRecursively(p); freed += 1 }
-        catch { case _: Exception => }
+  /** Best-effort janitor for scratch orphaned by KILLED runs (a SIGKILL
+    * skips every finally and shutdown hook): removes each per-process dir
+    * under `root` (graft's own scratch root, [[Scratch]]) that was last
+    * modified before `cutoffMs` and whose process is gone. Nothing
+    * outside `root` is touched. Returns how many dirs it removed. (r7
+    * lesson: ~40 GB of orphans from killed sessions ENOSPC'd the sf100
+    * curation cell.) */
+  private[graft] def sweepStaleScratch(root: java.nio.file.Path,
+      cutoffMs: Long): Int = {
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    def live(p: java.nio.file.Path): Boolean =
+      p.getFileName.toString.toLongOption
+        .exists(pid => java.lang.ProcessHandle.of(pid).isPresent)
+    if (!Files.isDirectory(root)) 0
+    else {
+      val ls = Files.list(root)
+      val stale = try ls.iterator.asScala.filter(p =>
+          Files.isDirectory(p) && !live(p) &&
+            Files.getLastModifiedTime(p).toMillis < cutoffMs).toList
+        finally ls.close()
+      stale.count { p =>
+        try { Scratch.deleteRecursively(p); true }
+        catch { case _: java.io.IOException => false }
       }
     }
-    if (freed > 0) log(s"swept $freed stale scratch dirs")
-  } catch { case _: Exception => }
+  }
 
   def main(args: Array[String]): Unit = {
     val benchT0 = System.nanoTime()
@@ -166,7 +167,11 @@ object Bench {
       if (progressWriter != null) progressWriter.println(line)
       if (verbose || progressWriter == null) System.err.println(line)
     }
-    sweepStaleScratch(progress)
+    try {
+      val freed = sweepStaleScratch(Scratch.root.getParent,
+        System.currentTimeMillis() - 2L * 3600 * 1000)
+      if (freed > 0) progress(s"swept $freed stale scratch dirs")
+    } catch { case _: Exception => }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.cores
     val spark = session(cpus).getOrCreate()
@@ -201,7 +206,7 @@ object Bench {
     val headlineT0 = System.nanoTime() // pace excludes JVM/session startup
     progress(s"warmup over ${queries.size} queries at sf0.001")
     queries.foreach { name =>
-      try SparkEntry.queries(name)(spark, "/root/testdata/sf0.001").count()
+      try SparkEntry.run(spark, name, "/root/testdata/sf0.001")(_.count())
       catch { case _: Throwable => }
       finally spark.catalog.clearCache()
     }
@@ -421,7 +426,9 @@ object Bench {
       progress(s"timing $name")
       listener.reset()
       var failed = false
-      def once(): Iter = {
+      // The scope closes after the Iter is taken: deleting the query's
+      // scratch is outside the timed region.
+      def once(): Iter = Scratch.scope {
         val c0 = osBean.getProcessCpuTime
         val t0 = System.nanoTime()
         try { SparkEntry.queries(name)(spark, sfDir).count() }
@@ -531,15 +538,11 @@ object Bench {
     // right after the headline queries, so it measures the layer; the
     // same probe re-runs after mor_tax into overhead_late (session-age
     // entropy tracking — see SURVEY §6).
-    def runOverheadProbe(): (Double, Double) = try {
+    def runOverheadProbe(): (Double, Double) = try Scratch.scope {
       val li = s"$sfDir/lineitem.parquet"
-      val wh = java.nio.file.Files.createTempDirectory("graft_ovh").toString
+      val (wh, cat) = Scratch.catalog(spark)
       val store = new graft.core.TableStore(spark, wh)
       store.addFiles("li", li)
-      val cat = s"govh${System.nanoTime()}"
-      spark.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.catalog.GraftCatalog].getName)
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
       def probe(from: String): Double = (1 to 3).map { _ =>
         val t0 = System.nanoTime()
         spark.sql(("SELECT l_returnflag, COUNT(*) AS n, " +
@@ -570,8 +573,8 @@ object Bench {
     // sidecar only; delete tiers are capped at half the table so small
     // fixtures stay meaningful.
     section("mor_tax", estCleanS = 150) {
-      if (!sys.env.contains("SPARK_GRAFT_SKIP_MORTAX")) {
-        val wh = java.nio.file.Files.createTempDirectory("graft_mortax").toString
+      if (!sys.env.contains("SPARK_GRAFT_SKIP_MORTAX")) Scratch.scope {
+        val (wh, cat) = Scratch.catalog(spark)
         val store = new graft.core.TableStore(spark, wh)
         val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
           .select(org.apache.spark.sql.functions.col("l_orderkey"),
@@ -582,10 +585,6 @@ object Bench {
             org.apache.spark.sql.functions.col("l_linenumber")))
         store.commit("mt", li, "create")
         val total = li.count()
-        val cat = s"gmtx${System.nanoTime()}"
-        spark.conf.set(s"spark.sql.catalog.$cat",
-          classOf[graft.catalog.GraftCatalog].getName)
-        spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
         def probe(): Double = (1 to 5).map { _ =>
           val t0 = System.nanoTime()
           spark.sql("SELECT COUNT(*) AS n, SUM(CAST(l_quantity AS " +

@@ -1,7 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * written inside the query's own scratch scope, plus oracle_sql.json,
+  * for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -12,12 +13,11 @@ object Verify {
     // prefixes. Unset (the driver) → the full surface.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val selected = SparkEntry.queries.filter { case (name, _) =>
+    val selected = SparkEntry.queries.keys.filter { name =>
       only.forall(_.exists(name.startsWith))
     }
-    selected.foreach { case (name, fn) =>
-      try {
-        val df = fn(spark, sfDir)
+    selected.foreach { name =>
+      try SparkEntry.run(spark, name, sfDir) { df =>
         // Guard: never OUTPUT a decimal column. The driver's hasher
         // canonicalizes DuckDB decimals via float64 but Spark decimals
         // exactly, so a decimal-typed output column hash-mismatches on
@@ -52,6 +52,10 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // Every query ran in its own scratch scope, so nothing should be left.
+    val leftKeys = spark.conf.getAll.keys.count(_.startsWith("spark.sql.catalog.g"))
+    val leftDirs = Option(Scratch.root.toFile.list).map(_.length).getOrElse(0)
+    System.err.println(s"[verify] scratch left: $leftKeys catalog keys, $leftDirs dirs")
     spark.stop()
   }
 }

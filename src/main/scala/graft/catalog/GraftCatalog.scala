@@ -34,7 +34,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 class GraftCatalog extends TableCatalog with StagingTableCatalog
     with ProcedureCatalog with FunctionCatalog {
   private var catalogName: String = _
-  private var warehouse: String = _
+  private var initialWarehouse: String = _
 
   /** V2 functions (the `bucket` transform) — the FunctionCatalog face is
     * what lets a write request clustering on `bucket(n, col)` and have
@@ -50,10 +50,19 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog
 
   override def initialize(name: String, options: CaseInsensitiveStringMap): Unit = {
     catalogName = name
-    warehouse = options.get("warehouse")
-    require(warehouse != null,
+    initialWarehouse = options.get("warehouse")
+    require(initialWarehouse != null,
       s"spark.sql.catalog.$name.warehouse must point at a TableStore warehouse")
   }
+
+  /** The warehouse root, read from the session conf on every call: the
+    * CatalogManager keeps this instance for the session's lifetime, and
+    * a [[graft.Scratch]] scope registers a pooled catalog name again over
+    * a fresh warehouse. The value seen at `initialize` covers a key that
+    * has since been unset. */
+  private def warehouse: String =
+    spark.conf.getOption(s"spark.sql.catalog.$catalogName.warehouse")
+      .getOrElse(initialWarehouse)
 
   override def name(): String = catalogName
 

@@ -14,7 +14,7 @@ object Explain {
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n===================== $n =====================")
-      try graft.SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      try graft.SparkEntry.run(spark, n, sfDir)(_.explain("formatted"))
       catch { case e: Throwable => println(s"explain failed: ${e.getMessage}") }
     }
     spark.stop()

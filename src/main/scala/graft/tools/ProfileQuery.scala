@@ -67,14 +67,15 @@ object ProfileQuery {
     })
     name.split(",").map(_.trim).filter(_.nonEmpty).foreach { q =>
       // warmup at the smallest scale, as the bench does
-      try graft.SparkEntry.queries(q)(spark, "/root/testdata/sf0.001").count()
+      try graft.SparkEntry.run(spark, q, "/root/testdata/sf0.001")(_.count())
       catch { case e: Throwable => println(s"[profile] warmup failed: $e") }
       spark.catalog.clearCache()
       (1 to reps).foreach { i =>
         log.reset()
         val t0 = System.nanoTime()
-        val n = graft.SparkEntry.queries(q)(spark, sfDir).count()
-        val t = (System.nanoTime() - t0) / 1e9
+        val (n, t) = graft.SparkEntry.run(spark, q, sfDir) { df =>
+          (df.count(), (System.nanoTime() - t0) / 1e9)
+        }
         Thread.sleep(200)
         println(f"[profile] $q run$i: $t%.2f s ($n rows)")
         log.dump()

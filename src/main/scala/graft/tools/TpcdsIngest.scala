@@ -33,19 +33,6 @@ object TpcdsIngest {
   /** table → its partition columns (empty for the dimension tables). */
   def partitionsOf(table: String): Seq[String] = factPartitions.get(table).toSeq
 
-  /** Depth-first delete. `Files.list` streams are CLOSED per directory —
-    * the stream holds the directory fd, and an unclosed recursive walk
-    * over a partitioned warehouse (thousands of partition dirs) exhausts
-    * the process fd limit, poisoning every open() that follows. */
-  def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val s = Files.list(p)
-      try s.iterator().asScala.foreach(deleteRecursively) finally s.close()
-    }
-    Files.deleteIfExists(p)
-    ()
-  }
-
   /** Ingest every `*.parquet` table under `dataDir`; the 7 fact tables go
     * through `commitPartitioned` on their date sk. */
   def ingest(spark: SparkSession, store: TableStore, dataDir: Path): Unit =
